@@ -54,7 +54,6 @@ _BOUNDED_NLJ = {
     "tpch_q11", "tpch_q22",
     # dedup_embedding_cosine pruned r16: its pair NLJ became the
     # mapInArrow block kernel (no join node below the gate)
-    "sim_topk_cosine", "sim_knn_label_vote",
     "text_unigram_logprob", "text_bigram_logprob",
     "dq_expectations",
     # audited round 9 (all broadcast builds bounded by construction):
@@ -69,10 +68,6 @@ _BOUNDED_NLJ = {
     "multimodal_image_phash", # 36-image fixture self-pairing (demo corpus)
     # audited round 10:
     "agg_ab_significance",    # 1-row arm-size broadcast into per-type rows
-    "sim_matryoshka_recall",  # two passes of the exact_topk core: the
-                              # 5-row query side broadcasts into the
-                              # corpus scan with a != condition (same
-                              # bounded shape as sim_topk_cosine)
     # audited round 11:
     "text_pmi_collocations",   # 1-row token-total broadcast into the
                                # bigram-count relation (lift denominator)
@@ -125,12 +120,7 @@ _BOUNDED_NLJ = {
     "agg_assoc_rules",  # 1-row distinct-user total broadcast onto the
                         # |domain|²-bounded rule relation (lift
                         # denominator — the pmi_collocations shape)
-    # audited round 15, wave D:
-    "ml_eval_ndcg",  # the exact_topk_neighbors core: 5-row query side
-                     # broadcast into the corpus scan with a !=
-                     # condition (the sim_topk_cosine shape)
     # audited round 15, wave E:
-    "ml_eval_mrr",  # same exact_topk_neighbors bounded query broadcast
     "text_tv_distance_sources",  # 1-row corpus token-total broadcast
                                  # into the vocabulary-bounded grain
                                  # (the pmi_collocations scalar shape)

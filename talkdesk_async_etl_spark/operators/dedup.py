@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from talkdesk_async_etl_spark.functions.expressions import dot, l2_norm
+from talkdesk_async_etl_spark.operators.cosine import cosine_candidates, fetch_small
 from talkdesk_async_etl_spark.plans.cache import (
     cache_scope,
     collect_release,
@@ -952,214 +954,47 @@ _COSINE_ORACLE = f"""
 """
 
 
-# Block-kernel gate for the all-pairs cosine scan: at or below this
-# many vectors the corpus matrix ships to every task (a bounded fetch:
-# 32k × 64 dims × 8 B = 16 MiB) and each task scores its Arrow batches
-# against it with a vectorized DIMENSION-ORDER fold — bitwise identical
-# to the JVM `aggregate(zip_with(...))` sequential fold, because both
-# evaluate acc = acc + a[d]·b[d] over the same doubles in the same
-# order (IEEE 754 ops are deterministic; neither path fuses or
-# reassociates). Above the gate the original join form runs unchanged —
-# the operator is the O(n²) oracle twin either way (the honest scale
-# path is the LSH/IVF candidate generator, see the docstring).
-_COSINE_BLOCK_MAX = 32_768
-
-
-def _single_threaded_blas():
-    """Pin BLAS to one thread in THIS process — a Spark task already
-    owns exactly one core, so BLAS-internal threading is pure spin-wait
-    contention: 32 concurrent workers each spinning a 2-thread OpenBLAS
-    pool measured 28.5 s wall for GEMM work that takes 2.1 s
-    single-threaded (sf1, 32 procs × 625×20000×64). Two layers because
-    Python workers are REUSED: env vars steer a fresh worker's first
-    numpy import; the ctypes call reconfigures a worker whose numpy
-    (and BLAS pool) is already live from an earlier task."""
-    import os
-
-    for v in (
-        "OPENBLAS_NUM_THREADS",
-        "OMP_NUM_THREADS",
-        "MKL_NUM_THREADS",
-        "NUMEXPR_NUM_THREADS",
-    ):
-        os.environ.setdefault(v, "1")
-    try:
-        import ctypes
-        import glob as _glob
-
-        import numpy as _np
-
-        base = os.path.dirname(_np.__file__)
-        for pat in ("../numpy.libs/*openblas*", ".libs/*openblas*"):
-            for p in _glob.glob(os.path.join(base, pat)):
-                try:
-                    lib = ctypes.CDLL(p)
-                except OSError:
-                    continue
-                for sym in (
-                    "openblas_set_num_threads64_",
-                    "openblas_set_num_threads",
-                ):
-                    try:
-                        getattr(lib, sym)(1)
-                        return
-                    except AttributeError:
-                        continue
-    except Exception:
-        pass
-
-
-def _dim_order_norms(mat):
-    """sqrt of the d-order square fold — the exact float sequence of
-    ``sqrt(aggregate(transform(v, x*x), 0.0, (s, x) -> s + x))``."""
-    import numpy as np
-
-    acc = np.zeros(mat.shape[0])
-    for d in range(mat.shape[1]):
-        acc += mat[:, d] * mat[:, d]
-    return np.sqrt(acc)
-
-
-def _cosine_pairs_blocked(emb: DataFrame) -> DataFrame:
-    """All-pairs cosine ≥ threshold via a mapInArrow block kernel (the
-    sim_topk_blocked device, guide-§4.2 shape): the gate-bounded corpus
-    matrix is broadcast once per executor; each Arrow batch of rows is
-    scored against it in NumPy with the dimension-order fold (see
-    _COSINE_BLOCK_MAX — bitwise-equal doubles, so the emitted pair SET
-    and every cos_sim value match the join form exactly; the final
-    6-dp rounding stays in Spark so the rounding rule is the engine's
-    own). Division semantics mirror the session's: under ANSI (the
-    Spark 4 default, and what the join form does) a zero cosine
-    denominator fails the query; under non-ANSI the NaN/±inf results
-    flow through Spark's NaN-is-largest ``>=`` exactly like the join
-    form's."""
-    import numpy as np
-
-    spark = emb.sparkSession
-    try:
-        ansi = spark.conf.get("spark.sql.ansi.enabled", "true").lower() == "true"
-    except Exception:
-        ansi = True
-    tbl = emb.toArrow()
-    ids = tbl.column("vec_id").to_numpy().astype(np.int64)
-    mat = np.asarray(
-        tbl.column("v").combine_chunks().flatten(), dtype=np.float64
-    ).reshape(len(ids), -1)
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    def blocks(batches):
-        _single_threaded_blas()  # BEFORE the worker's numpy import
-        import numpy as np
-        import pyarrow as pa
-
-        b_ids, b_mat = bc.value
-        n, dim = b_mat.shape
-        nb = _dim_order_norms(b_mat)
-        # chunk the batch side so the (chunk × n) score buffer stays
-        # ~64 MiB regardless of corpus size under the gate
-        chunk = max(1, (64 << 20) // (8 * max(1, n)))
-        for batch in batches:
-            m = batch.num_rows
-            if m == 0:
-                continue
-            a_ids = batch.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            a_mat = np.asarray(
-                batch.column("v").flatten(), dtype=np.float64
-            ).reshape(m, -1)
-            na = _dim_order_norms(a_mat)
-            for s in range(0, m, chunk):
-                A = a_mat[s : s + chunk]
-                aid = a_ids[s : s + chunk]
-                an = na[s : s + chunk]
-                # Candidate generation by BLAS GEMM (compute-bound, ~10×
-                # the 64-pass elementwise fold) with a margin that
-                # dwarfs the reassociation error: |gemm − fold| ≤
-                # dim·eps·‖a‖‖b‖ ≈ 1.4e-14 relative, margin 1e-9.
-                upper = b_ids[None, :] > aid[:, None]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    denom = an[:, None] * nb[None, :]
-                    if ansi and bool(np.any(upper & (denom == 0.0))):
-                        raise ArithmeticError(
-                            "[DIVIDE_BY_ZERO] zero cosine denominator "
-                            "under ANSI division semantics (matches the "
-                            "pair-join form's behavior)"
-                        )
-                    approx = (A @ b_mat.T) / denom
-                    cand = upper & (
-                        (approx >= _COSINE_THRESHOLD - 1e-9)
-                        | np.isnan(approx)
-                    )
-                ai, bj = np.nonzero(cand)
-                if not len(ai):
-                    continue
-                # Exact dimension-order fold ONLY on the candidates —
-                # the emitted values are the JVM fold's doubles, bit
-                # for bit; the margin guarantees no true pair was lost.
-                va, vb = A[ai], b_mat[bj]
-                acc = np.zeros(len(ai))
-                for d in range(dim):
-                    acc += va[:, d] * vb[:, d]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = acc / (an[ai] * nb[bj])
-                    keep = (sim >= _COSINE_THRESHOLD) | np.isnan(sim)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(aid[ai][keep], type=pa.int64()),
-                        pa.array(b_ids[bj][keep], type=pa.int64()),
-                        pa.array(sim[keep], type=pa.float64()),
-                    ],
-                    names=["vec_a", "vec_b", "cos_sim_raw"],
-                )
-
-    out = emb.mapInArrow(
-        blocks, schema="vec_a long, vec_b long, cos_sim_raw double"
-    )
-    return out.select(
-        "vec_a", "vec_b", F.round("cos_sim_raw", 6).alias("cos_sim")
-    )
-
-
 @query("dedup_embedding_cosine", oracle=_COSINE_ORACLE, tags=("dedup", "similarity"))
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D2/D3 bridge: embedding near-dup pairs with cosine ≥ 0.45
     (see _COSINE_THRESHOLD — nonempty at every SF). Brute-force O(n²)
     pair scan — the oracle-checkable semantics; the LSH-bucketed scale
-    path is sim_topk_ivf (similarity.py). All math in float64. At or
-    below _COSINE_BLOCK_MAX vectors the scan runs as a NumPy block
-    kernel whose dimension-order fold is bitwise-equal to the JVM
-    ``aggregate(zip_with(...))`` form (measured ~50× the per-pair
-    throughput of interpreted HOF expressions at sf1's 20k vectors);
-    above it the original pair join runs unchanged."""
-    n_vecs = t(spark, sf_dir, "embeddings").count()  # metadata count
-    emb = t(spark, sf_dir, "embeddings", spread=True).select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    if n_vecs <= _COSINE_BLOCK_MAX:
-        return _cosine_pairs_blocked(emb)
-    return _cosine_pairs_joined(emb)
+    path is sim_topk_ivf (similarity.py). All math in float64.
+
+    The operator's one bounded build-time job is ``fetch_small``: one
+    read of at most _COSINE_BLOCK_MAX + 1 vectors (16 MiB). At or below
+    the gate that table is the broadcast corpus of the exact-cosine
+    kernel (operators/cosine.py; ~50× the per-pair throughput of the
+    HOF join at sf1's 20k vectors); above it the pair join runs. Both
+    end in :func:`_over_threshold`: without ANSI ``x / 0.0`` is NULL and
+    fails the threshold, with ANSI it raises DIVIDE_BY_ZERO."""
+    cols = ("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    corpus = fetch_small(t(spark, sf_dir, "embeddings").select(*cols))
+    emb = t(spark, sf_dir, "embeddings", spread=True).select(*cols)
+    if corpus is None:
+        return _cosine_pairs_joined(emb)
+    return _over_threshold(cosine_candidates(emb, corpus, min_sim=_COSINE_THRESHOLD))
 
 
-def _cosine_pairs_joined(emb: DataFrame) -> DataFrame:
-    """The original pair-join form of :func:`dedup_embedding_cosine`
-    (JVM higher-order-function dot products) — the past-the-gate path,
-    kept verbatim so the block kernel has an in-session A/B and
-    equivalence twin."""
-    with_norm = scoped_persist(
-        emb.withColumn(
-            "norm",
-            F.sqrt(F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda s, x: s + x)),
-        )
-    )
-    a = with_norm.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = with_norm.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    sim = dot / (F.col("na") * F.col("nb"))
+def _over_threshold(pairs: DataFrame) -> DataFrame:
+    """``(vec_a, vec_b, dot, na, nb)`` pairs → the cos_sim ≥ threshold
+    answer: the Spark tail both forms share."""
     return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos_sim_raw", sim)
+        pairs.withColumn("cos_sim_raw", F.col("dot") / (F.col("na") * F.col("nb")))
         .filter(F.col("cos_sim_raw") >= _COSINE_THRESHOLD)
         .select("vec_a", "vec_b", F.round("cos_sim_raw", 6).alias("cos_sim"))
     )
+
+
+def _cosine_pairs_joined(emb: DataFrame) -> DataFrame:
+    """The pair-join form of :func:`dedup_embedding_cosine` (JVM
+    higher-order-function dot products) — the past-the-gate path and
+    the kernel's in-session equivalence twin."""
+    with_norm = scoped_persist(emb.withColumn("norm", l2_norm("v")))
+    a = with_norm.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
+    b = with_norm.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
+    pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
+    return _over_threshold(pairs.withColumn("dot", dot("va", "vb")))
 
 
 def winnow_fingerprints(text_col, k: int = 3, window: int = 4):

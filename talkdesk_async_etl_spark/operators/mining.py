@@ -1041,7 +1041,7 @@ def ml_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-attested there and reused verbatim here.
 
     Plan: the exact_topk_neighbors core (query side broadcast into
-    one corpus scan — the allowlisted bounded NLJ), then label joins
+    one corpus scan by the exact-cosine kernel), then label joins
     AGAINST THE 50-ROW topk relation (corpus side column-pruned to
     (vec_id, label)), a ≤|labels|-row count rollup for the ideal, and
     domain-bounded final arithmetic. One corpus-sized exchange total
@@ -1051,7 +1051,7 @@ def ml_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_topk_neighbors,
     )
 
-    emb = t(spark, sf_dir, "embeddings", spread=True)
+    emb = t(spark, sf_dir, "embeddings")
     vecs = emb.select("vec_id", _as_double("embedding").alias("v"))
     labels = emb.select("vec_id", F.col("label").alias("lab"))
     topk = exact_topk_neighbors(vecs)
@@ -1207,7 +1207,7 @@ def ml_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-1e6 hit by the published first_rel_rank). The ranking is
     the hash-attested sim_topk_cosine contract reused verbatim.
 
-    Plan: the exact_topk_neighbors core (allowlisted bounded NLJ) +
+    Plan: the exact_topk_neighbors core (one kernel corpus scan) +
     label joins against the 50-row topk relation + a ≤|queries|-group
     aggregate — one corpus-sized pass, everything after ≤ 50 rows."""
     from talkdesk_async_etl_spark.operators.similarity import (
@@ -1215,7 +1215,7 @@ def ml_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_topk_neighbors,
     )
 
-    emb = t(spark, sf_dir, "embeddings", spread=True)
+    emb = t(spark, sf_dir, "embeddings")
     vecs = emb.select("vec_id", _as_double("embedding").alias("v"))
     labels = emb.select("vec_id", F.col("label").alias("lab"))
     topk = exact_topk_neighbors(vecs)

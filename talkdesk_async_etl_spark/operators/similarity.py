@@ -2,8 +2,11 @@
 
 Two paths:
 
-- ``sim_topk_cosine`` — brute-force top-k cosine: broadcast the (small)
-  query set, stream the corpus through it once, two-phase top-k.
+- ``sim_topk_cosine`` (and its alias id ``sim_topk_blocked``) —
+  brute-force top-k cosine: the (small) query set is fetched once and
+  broadcast into the exact-cosine Arrow kernel (operators/cosine.py),
+  which streams the corpus through it once and proposes block-local
+  top-k rows; Spark divides, ranks and keeps the global top-k.
   Exact; oracle-checked.
 - ``sim_topk_ivf`` — multi-table random-hyperplane LSH (IVF-style
   bucketing): L independent tables of b-bit signatures; candidates =
@@ -23,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from talkdesk_async_etl_spark.functions.expressions import as_double_array as _as_double, dot as _dot, l2_norm as _norm
+from talkdesk_async_etl_spark.operators.cosine import _COSINE_BLOCK_MAX, cosine_candidates, fetch_small
 from talkdesk_async_etl_spark.plans.cache import cache_scope, collect_release, scoped_persist
 from talkdesk_async_etl_spark.plans.registry import query
 from talkdesk_async_etl_spark.session import single_partition_loop
@@ -40,14 +45,6 @@ _TOP_K = 10
 # b, fewer L.
 _N_TABLES = 16
 _N_BITS = 5
-
-
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _norm(vcol):
-    return F.sqrt(F.aggregate(F.transform(vcol, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
 
 _TOPK_ORACLE = f"""
@@ -70,22 +67,25 @@ def exact_topk_neighbors(emb: DataFrame) -> DataFrame:
     """Tie-broken exact cosine top-k over an ``(vec_id, v)`` frame:
     ``(q_id, neighbor_id, sim, rank)`` for the ``vec_id < _N_QUERIES``
     query set. The shared core of sim_topk_cosine (which reports it)
-    and sim_knn_label_vote (which votes over it)."""
-    with_norm = scoped_persist(emb.withColumn("norm", _norm("v")))
-    q = with_norm.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("norm").alias("qn")
-    )
-    c = with_norm.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), F.col("norm").alias("cn")
-    )
-    dot = F.aggregate(F.zip_with("qv", "cv", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("q_id"))
-        .withColumn("sim", dot / (F.col("qn") * F.col("cn")))
-    )
+    and its consumers (kNN vote, Matryoshka recall, NDCG, MRR).
+
+    Build time runs one bounded job, ``fetch_small`` of the query set,
+    which is broadcast into the exact-cosine kernel: one corpus scan
+    proposing each batch's local top-k per query. Spark then divides,
+    ranks by ``(sim desc, neighbor_id asc)`` and keeps k, so NULL, NaN
+    and ANSI division behave as in a declarative join. Callers pass the
+    plain scan, not ``spread=True``: at microseconds per vector a
+    round-robin repartition costs more than it parallelizes (sf0.1,
+    4 cores: ~1.2 → ~0.8 s median)."""
+    queries = fetch_small(emb.filter(F.col("vec_id") < _N_QUERIES))
+    if queries is None:
+        raise ValueError(f"more than {_COSINE_BLOCK_MAX} query vectors")
+    sim = F.col("dot") / (F.col("nb") * F.col("na"))
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        cosine_candidates(emb, queries, top_k=_TOP_K)
+        .select(F.col("vec_b").alias("q_id"), F.col("vec_a").alias("neighbor_id"), sim.alias("sim"))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _TOP_K)
         .select("q_id", "neighbor_id", "sim", "rank")
     )
@@ -95,75 +95,22 @@ def exact_topk_neighbors(emb: DataFrame) -> DataFrame:
 def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3 baseline: exact top-10 cosine neighbors for query vectors
     vec_id < 5. The query side is broadcast (it is tiny by
-    construction); the corpus is scanned once with JVM-side
-    ``zip_with`` dot products; ranking is a window over q_id with a
-    deterministic vec_id tie-break."""
-    emb = t(spark, sf_dir, "embeddings", spread=True).select("vec_id", _as_double("embedding").alias("v"))
+    construction); the corpus is scanned once by the exact-cosine
+    kernel; ranking is a window over q_id with a deterministic vec_id
+    tie-break."""
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", _as_double("embedding").alias("v"))
     return exact_topk_neighbors(emb).select(
         "q_id", "neighbor_id", F.round("sim", 6).alias("cos_sim"), "rank"
     )
 
 
-@query("sim_topk_blocked", oracle=None, tags=("similarity", "udf"))
+@query("sim_topk_blocked", oracle=_TOPK_ORACLE, tags=("similarity", "udf"))
 def sim_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D3 scale variant: block-matmul brute force via ``mapInPandas``.
-
-    The query matrix (tiny by construction) ships inside the task
-    closure; each Arrow batch of corpus vectors is scored against ALL
-    queries with one numpy matmul (vectorized float64 — ~100× the
-    throughput of per-element interpreted expressions), and the task
-    emits only its block-local top-k per query. A final window keeps
-    the global top-k, so the shuffle carries O(k · partitions ·
-    n_queries) rows — the corpus itself never shuffles.
-
-    Ranking ties differ from the sequential-fold exact operator only in
-    last-ulp float ordering → rows-only check + recall unit test."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    emb = t(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    q_rows = emb.filter(F.col("vec_id") < _N_QUERIES).collect()  # tiny query set
-    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
-    def per_block(batches):
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            c = np.array(list(pdf["embedding"]), dtype=np.float64)
-            sims = (c @ q_mat.T) / (np.linalg.norm(c, axis=1)[:, None] * q_norm[None, :])
-            out = []
-            for qi in range(len(q_ids)):
-                col = sims[:, qi]
-                mask = ids != q_ids[qi]
-                cand_idx = np.nonzero(mask)[0]
-                if not len(cand_idx):
-                    continue
-                k = min(_TOP_K, len(cand_idx))
-                top = cand_idx[np.argpartition(-col[cand_idx], k - 1)[:k]]
-                out.append(
-                    pd.DataFrame({"q_id": q_ids[qi], "neighbor_id": ids[top], "sim": col[top]})
-                )
-            if out:
-                yield pd.concat(out)
-
-    local_topk = emb.mapInPandas(per_block, schema=out_schema)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        local_topk.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("q_id", "neighbor_id", F.round("sim", 6).alias("cos_sim"), "rank")
-    )
+    """D3 block-scan id: sim_topk_cosine's answer, which is itself the
+    Arrow block scan (each corpus batch scored against all queries,
+    only block-local top-k rows shuffled). Kept as its own id for the
+    bench and for sim_blocked_topk_ok."""
+    return sim_topk_cosine(spark, sf_dir)
 
 
 def _hyperplane_tables(dim: int = 64, n_tables: int = _N_TABLES, n_bits: int = _N_BITS):
@@ -256,7 +203,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("cn"),
         F.posexplode("buckets").alias("tbl", "probe"),
     )
-    dot = F.aggregate(F.zip_with("qv", "cv", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+    dot = _dot("qv", "cv")
     scored = (
         c.join(F.broadcast(q), ["tbl", "probe"])
         .filter(F.col("neighbor_id") != F.col("q_id"))
@@ -310,21 +257,18 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_blocked_topk_ok",
-    # Constant all-TRUE oracle over the query ids: the blocked-matmul
-    # variant must return a FULL top-k per query whose k-th similarity
-    # is within float tolerance of the exact operator's k-th — i.e. a
-    # valid top-k set even when last-ulp summation-order ties reorder
-    # the boundary. A lost block / wrong merge / dropped query flips a
-    # row to FALSE.
+    # Constant all-TRUE oracle over the query ids: the block-scan id
+    # must return a FULL top-k per query whose k-th similarity is
+    # within float tolerance of sim_topk_cosine's k-th. A lost block /
+    # wrong merge / dropped query flips a row to FALSE.
     oracle=f"SELECT DISTINCT vec_id AS q_id, CAST(1 AS BOOLEAN) AS topk_ok "
     f"FROM embeddings WHERE vec_id < {_N_QUERIES}",
     tags=("similarity", "invariant"),
 )
 def sim_blocked_topk_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-attestable equivalence invariant for the mapInPandas
-    block-matmul top-k: per query, exactly k neighbors and a k-th
-    similarity no worse than the exact k-th minus 2e-6 (both sides
-    round to 6 decimals; summation order may differ in the last ulp)."""
+    """Driver-attestable equivalence invariant for the block-scan top-k
+    id: per query, exactly k neighbors and a k-th similarity no worse
+    than the exact k-th minus 2e-6 (both sides round to 6 decimals)."""
     with cache_scope():
         exact = (
             sim_topk_cosine(spark, sf_dir)
@@ -337,7 +281,7 @@ def sim_blocked_topk_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("cos_sim").alias("blocked_kth"), F.count(F.lit(1)).alias("n"))
         )
         ok = (F.col("n") == _TOP_K) & (F.col("blocked_kth") >= F.col("exact_kth") - 2e-6)
-        # _N_QUERIES rows by construction → free the exact path's cache.
+        # _N_QUERIES rows by construction → free the kernel broadcasts.
         return collect_release(exact.join(blocked, "q_id").select("q_id", ok.alias("topk_ok")))
 
 
@@ -379,7 +323,7 @@ def sim_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = with_norm.filter(F.col("vec_id") < _N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv"), F.col("norm").alias("cn")
     )
-    dot = F.aggregate(F.zip_with("v", "cv", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+    dot = _dot("v", "cv")
     scored = with_norm.join(F.broadcast(cents)).withColumn("sim", dot / (F.col("norm") * F.col("cn")))
     w = Window.partitionBy("vec_id").orderBy(F.col("sim").desc(), F.col("centroid_id").asc())
     return (
@@ -680,7 +624,7 @@ def sim_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus scan, and the vote/confusion aggregates act on queries×k /
     queries rows. With the ANN candidates (sim_topk_ivf) swapped in
     for the exact core, the same plan classifies at index speed."""
-    emb = t(spark, sf_dir, "embeddings", spread=True).select(
+    emb = t(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v"), "label"
     )
     labels = emb.select("vec_id", "label")
@@ -1098,10 +1042,10 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (corpus scanned twice, never shuffled — the prefix pass's dot is an
     eighth of the flops (8 of 64 dims)); the overlap join touches only the two
     k-sized result relations."""
-    emb = t(spark, sf_dir, "embeddings", spread=True).select(
+    emb = t(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    pref = t(spark, sf_dir, "embeddings", spread=True).select(
+    pref = t(spark, sf_dir, "embeddings").select(
         "vec_id",
         _as_double(F.slice("embedding", 1, _MRL_PREFIX_DIMS)).alias("v"),
     )

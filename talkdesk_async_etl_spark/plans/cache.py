@@ -8,8 +8,9 @@ MEMORY_AND_DISK relation per persist call with nothing ever released.
 
 Contract (single-threaded, like the driver/bench/parity harnesses):
 
-- operators call :func:`scoped_persist` instead of ``df.persist`` so
-  every cached relation is tracked;
+- operators call :func:`scoped_persist` instead of ``df.persist`` and
+  :func:`scoped_broadcast` instead of ``sc.broadcast`` so every cached
+  relation and broadcast is tracked;
 - queries whose output is tiny BY CONSTRUCTION (the invariant
   companions — containment anti-joins, recall flags) finish with
   :func:`collect_release`: materialize the handful of result rows on
@@ -30,10 +31,12 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.broadcast import Broadcast
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-_SCOPED: list[DataFrame] = []
+# Persisted relations and broadcasts alike: both release by unpersist().
+_SCOPED: list[DataFrame | Broadcast] = []
 _MARKS: list[int] = []
 
 
@@ -44,6 +47,16 @@ def scoped_persist(
     df.persist(level)
     _SCOPED.append(df)
     return df
+
+
+def scoped_broadcast(spark: SparkSession, value) -> Broadcast:
+    """``sc.broadcast(value)`` + registration, so the broadcast is
+    released with the scope's persists. Release is ``unpersist()``, not
+    ``destroy()``: a plan that is still lazy re-sends the value instead
+    of failing."""
+    bc = spark.sparkContext.broadcast(value)
+    _SCOPED.append(bc)
+    return bc
 
 
 @contextmanager

@@ -111,7 +111,6 @@ def test_rows_only_query_set_is_pinned():
         # they now run the engine-agreeing md5-60-bit hash leaf and
         # carry full DuckDB oracles (VERDICT r8 task 5).
         "dedup_minhash_lsh",
-        "sim_topk_blocked",
         "sim_topk_ivf",
         # PQ: codebook/ADC values are engine-internal floats; the
         # driver-checked guarantee is sim_pq_recall_ok's 0.7 floor.

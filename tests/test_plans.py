@@ -1620,8 +1620,8 @@ def test_round15_wave_d_plan_shapes(spark):
     nested loop; changepoint's windows are type-partitioned); the
     multiclass confusion eval is one scan + four broadcast hash joins
     over domain-bounded relations (no SMJ after the explicit
-    broadcasts); NDCG carries exactly the one allowlisted bounded NLJ
-    (the sim_topk_cosine query-broadcast shape); kfold is one scan
+    broadcasts); NDCG has no nested-loop join (its exact top-k core
+    is the Arrow kernel's corpus scan); kfold is one scan
     with a single broadcast join back."""
     import re
 
@@ -1651,7 +1651,7 @@ def test_round15_wave_d_plan_shapes(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
     plan = plan_of(spark, "ml_eval_ndcg")
-    assert len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)) == 1
+    assert len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)) == 0
     assert "SortMergeJoin" not in plan
 
     plan = plan_of(spark, "sample_kfold_assign")
@@ -1666,9 +1666,10 @@ def test_round15_wave_e_plan_shapes(spark):
     persisted grain with broadcast equi-joins only; churn's single
     sort-merge join is the full-outer self-join of the user-week
     grain on its natural key (full outer cannot broadcast — and at
-    scale SMJ on the grain key is the right plan); TV distance and
-    MRR carry exactly their one allowlisted bounded NLJ (the 1-row
-    corpus-total / query-broadcast shapes); Brier is the scored-labels
+    scale SMJ on the grain key is the right plan); TV distance carries
+    exactly its one allowlisted bounded NLJ (the 1-row corpus-total
+    shape) and MRR none (its exact top-k core is the Arrow kernel's
+    corpus scan); Brier is the scored-labels
     tree plus one 2-group aggregate."""
     import re
 
@@ -1695,7 +1696,7 @@ def test_round15_wave_e_plan_shapes(spark):
     assert "SortMergeJoin" not in plan
 
     plan = plan_of(spark, "ml_eval_mrr")
-    assert len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)) == 1
+    assert len(re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)) == 0
     assert "SortMergeJoin" not in plan
 
     plan = plan_of(spark, "ml_eval_brier")
