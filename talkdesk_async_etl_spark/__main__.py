@@ -2,9 +2,9 @@
 pipeline run end-to-end (the reference's ``python -m
 local.talkdesk_local_etl`` / Databricks job surface, README.md:316).
 
-The HTTP source uses aiohttp when available and falls back to stdlib
-urllib otherwise; ``--fixture-dir`` selects the local-file source —
-the same pluggable connector the end-to-end tests drive.
+The HTTP source uses stdlib urllib; ``--fixture-dir`` selects the
+local-file source — the same pluggable connector the end-to-end tests
+drive.
 """
 
 from __future__ import annotations

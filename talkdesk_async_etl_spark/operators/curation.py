@@ -53,7 +53,7 @@ from talkdesk_async_etl_spark.sources.io import read_table as t
 
 # Stage constants are IMPORTED from the standalone operators, so the
 # composed pipeline can never drift from the attested cores.
-from talkdesk_async_etl_spark.operators.dedup import _shingle_hashes
+from talkdesk_async_etl_spark.operators.dedup import near_jaccard_pairs
 from talkdesk_async_etl_spark.operators.sampling import _TEMP_ALPHA, _TEMP_ALPHA_F, _TEMP_MICRO
 from talkdesk_async_etl_spark.operators.text import _PACK_BUDGET, _PACK_SHARDS
 from talkdesk_async_etl_spark.operators.text_quality import _DECON_MOD, _DECON_N
@@ -290,25 +290,11 @@ def curation_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # stage 3: near dedup — 3-shingle Jaccard >= 0.6, larger id drops
-    sh = scoped_persist(
-        s2.select(
-            "doc_id", _shingle_hashes(F.col("text")).alias("shs")
-        ).select("doc_id", F.size("shs").alias("n"), F.explode("shs").alias("h"))
+    near_drop = (
+        near_jaccard_pairs(s2.select("doc_id", "text"))
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
     )
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .agg(F.count("*").alias("c"))
-    )
-    near_drop = pairs.filter(
-        F.col("c") / (F.col("na") + F.col("nb") - F.col("c")) >= float(_JACC_T)
-    ).select(F.col("doc_b").alias("doc_id")).distinct()
     s3 = scoped_persist(s2.join(near_drop, "doc_id", "left_anti"))
 
     # stage 4: decontamination — eval slice + any 4-gram overlap drops
@@ -819,7 +805,6 @@ def incremental_audit_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     live SURVIVORS only; every audit aggregate reads a persisted
     parent. Output is 5 rows by construction — the registered wrapper
     collect_releases every stage cache."""
-    from talkdesk_async_etl_spark.operators.dedup import near_jaccard_pairs
     from talkdesk_async_etl_spark.operators.dedup_clusters import (
         incremental_components_from,
     )

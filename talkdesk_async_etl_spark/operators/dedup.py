@@ -328,13 +328,14 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_jaccard_pairs(docs)
 
 
-def near_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
-    """The 3-shingle exact-Jaccard pair build behind
-    :func:`dedup_near_jaccard`, over any ``(doc_id, text)`` frame —
-    factored out so composed pipelines (pipeline_incremental_e2e's
-    cluster-maintenance stage) reuse the attested semantics instead of
-    copying them. Caller must hold an active cache_scope (the shingle
-    persist registered here is released by the caller's scope exit)."""
+def shingle_overlaps(docs: DataFrame) -> DataFrame:
+    """Every document pair sharing at least one 3-shingle, over any
+    ``(doc_id, text)`` frame → ``(doc_a, doc_b, na, nb, c)`` with
+    doc_a < doc_b, na/nb the two shingle-set sizes and c the shared
+    count — the one exhaustive shingle self-join behind the Jaccard,
+    containment and curation near-dup relations. Caller must hold an
+    active cache_scope (the shingle persist registered here is
+    released by the caller's scope exit)."""
     shingled = docs.select("doc_id", _shingle_hashes(F.col("text")).alias("shs"))
     # Persist (scoped): both self-join sides read this; without it the
     # whole shingle pipeline is recomputed per side. (At 100 TB this is
@@ -343,7 +344,7 @@ def near_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
         shingled.select("doc_id", F.size("shs").alias("n"), F.explode("shs").alias("h"))
     )
     a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
+    return (
         a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
@@ -353,8 +354,17 @@ def near_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
         )
         .agg(F.count("*").alias("c"))
     )
+
+
+def near_jaccard_pairs(docs: DataFrame, threshold: float = 0.6) -> DataFrame:
+    """The 3-shingle exact-Jaccard pair build behind
+    :func:`dedup_near_jaccard`, over any ``(doc_id, text)`` frame —
+    factored out so composed pipelines (the curation audit's near-dup
+    stage, pipeline_incremental_e2e's cluster-maintenance stage) reuse
+    the attested semantics instead of copying them. Caller must hold
+    an active cache_scope (see :func:`shingle_overlaps`)."""
     jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return pairs.filter(jac >= threshold).select(
+    return shingle_overlaps(docs).filter(jac >= threshold).select(
         "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
     )
 
@@ -376,23 +386,8 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation swaps to the banded LSH path unchanged
     (containment-style LSH wants per-doc signature NORMALIZATION by
     min-size, which the verification step here already provides)."""
-    docs = t(spark, sf_dir, "documents", spread=True).select(
-        "doc_id", _shingle_hashes(F.col("text")).alias("shs")
-    )
-    sh = scoped_persist(
-        docs.select("doc_id", F.size("shs").alias("n"), F.explode("shs").alias("h"))
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .agg(F.count("*").alias("c"))
-    )
+    docs = t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
+    pairs = shingle_overlaps(docs)
     cont = F.col("c") / F.least("na", "nb")
     jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
     return pairs.filter(cont >= 0.7).select(

@@ -290,11 +290,17 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
 
-def _trade_und(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The undirected nation trade edge list (a < b, deduped) the
-    triangle/clustering kernels share — factored so callers can
-    persist + materialize it BEFORE opening the edge-sized conf
-    window (:func:`_edge_window`)."""
+def _trades(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """lineitem ⋈ orders ⋈ customer ⋈ supplier — one row per lineitem
+    carrying its supplier and customer nation; every graph kernel's
+    edge list is an aggregate of this join tree. Left unprojected:
+    Catalyst prunes each caller's unused columns below the joins.
+
+    lineitem is read WITHOUT the ``spread`` repartition: the
+    lineitem⋈orders shuffle join parallelizes the stream side at its
+    own exchange, so a prefixed full-table repartition is a pure extra
+    shuffle (measured 1.9 → 0.8 s for graph_pagerank at sf0.1).
+    customer and supplier are true dimensions → broadcast."""
     li = t(spark, sf_dir, "lineitem")
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
@@ -303,13 +309,28 @@ def _trade_und(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+    )
+
+
+def _trade_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One undirected ``(a, b)`` nation pair (a < b) per cross-border
+    trade row — self-loops dropped, duplicates kept."""
+    return (
+        _trades(spark, sf_dir)
         .where(F.col("s_nationkey") != F.col("c_nationkey"))
         .select(
             F.least("s_nationkey", "c_nationkey").alias("a"),
             F.greatest("s_nationkey", "c_nationkey").alias("b"),
         )
-        .distinct()
     )
+
+
+def _trade_und(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The undirected nation trade edge list (a < b, deduped) the
+    triangle/clustering/BFS kernels share — factored so callers can
+    persist + materialize it BEFORE opening the edge-sized conf
+    window (:func:`_edge_window`)."""
+    return _trade_pairs(spark, sf_dir).distinct()
 
 
 def triangle_count_plan(
@@ -370,23 +391,11 @@ def triangle_count_plan(
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the supplier-nation → customer-nation
     trade graph, damping 0.85, 8 fixed iterations (see module
-    docstring for the scale shape and the dangling-mass convention).
-
-    The edge build deliberately reads lineitem WITHOUT the ``spread``
-    repartition: the lineitem⋈orders shuffle join parallelizes the
-    stream side at its own exchange, so a prefixed full-table
-    repartition is a pure extra shuffle (measured 1.9 → 0.8 s at
-    sf0.1). customer and supplier are true dimensions → broadcast."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
+    docstring for the scale shape and the dangling-mass convention)."""
     n = t(spark, sf_dir, "nation")
     with cache_scope():
         edges_raw = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+            _trades(spark, sf_dir)
             .groupBy(
                 F.col("s_nationkey").alias("src"),
                 F.col("c_nationkey").alias("dst"),
@@ -454,23 +463,9 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     level. Output is ≤|nation| rows by construction → materialized
     inside the scope (collect_release), so the persisted edge/visited
     relations serve every round before release."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
     with cache_scope():
-        und = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-            .where(F.col("s_nationkey") != F.col("c_nationkey"))
-            .select(
-                F.least("s_nationkey", "c_nationkey").alias("a"),
-                F.greatest("s_nationkey", "c_nationkey").alias("b"),
-            )
-            .distinct()
-        )
+        und = _trade_und(spark, sf_dir)
         # Graph-sized partitioning, same reasoning as pagerank_from_edges
         # and propagate_min_labels: the iteration works on the EDGE
         # graph, orders of magnitude smaller than the corpus that built
@@ -585,21 +580,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter is a broadcast of the (tiny) dropped-node set; for
     billion-node graphs switch to the bucketed semi-join form the
     components kernels use."""
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    pairs = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .where(F.col("s_nationkey") != F.col("c_nationkey"))
-        .groupBy(
-            F.least("s_nationkey", "c_nationkey").alias("a"),
-            F.greatest("s_nationkey", "c_nationkey").alias("b"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
+    pairs = _trade_pairs(spark, sf_dir).groupBy("a", "b").agg(F.count(F.lit(1)).alias("w"))
     totals = pairs.agg(
         F.count(F.lit(1)).alias("n_pairs"), F.sum("w").alias("total_w")
     )
@@ -706,16 +687,10 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest-path vector (probed: source 3 reaches all 25 nations at
     every SF inside 6 rounds). All arithmetic is BIGINT — no float
     relaxation drift."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("bigint")
     edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        _trades(spark, sf_dir)
         .where(F.col("s_nationkey") != F.col("c_nationkey"))
         .groupBy(
             F.col("s_nationkey").cast("bigint").alias("src"),
@@ -755,6 +730,20 @@ _CN_TOP_EDGES = 60  # deterministic sparsification: the 25-nation trade
 # the top-60 pair edges by trade volume (ties broken by the pair key)
 # yields a sparse graph with real missing-edge candidates at every SF,
 # and the threshold is a RANK, not a count, so it is scale-stable.
+
+
+def _trade_top_und(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The sparsified undirected trade graph the link-prediction,
+    assortativity and two-hop kernels share: the top-``_CN_TOP_EDGES``
+    ``(a, b)`` pairs by trade volume, ties broken by the pair key."""
+    return (
+        _trade_pairs(spark, sf_dir)
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("n_trades"))
+        .orderBy(F.desc("n_trades"), "a", "b")
+        .limit(_CN_TOP_EDGES)
+        .select("a", "b")
+    )
 
 
 def _oracle_common_neighbors() -> str:
@@ -834,26 +823,8 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair key; degree joins broadcast at this node count and become
     edge-keyed shuffles past the threshold (AQE re-plans off the same
     exchange)."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     with cache_scope():
-        und = scoped_persist(
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-            .where(F.col("s_nationkey") != F.col("c_nationkey"))
-            .select(
-                F.least("s_nationkey", "c_nationkey").alias("a"),
-                F.greatest("s_nationkey", "c_nationkey").alias("b"),
-            )
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n_trades"))
-            .orderBy(F.desc("n_trades"), "a", "b")
-            .limit(_CN_TOP_EDGES)
-            .select("a", "b")
-        )
+        und = scoped_persist(_trade_top_und(spark, sf_dir))
         with _edge_window(und):
             return collect_release(common_neighbors_from(und))
 
@@ -977,26 +948,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     real graph scale the degree relation passes the broadcast
     threshold and the joins become edge-keyed shuffles; the final
     statistic is a single map-side-combinable reduction either way."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     with cache_scope():
-        und = scoped_persist(
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-            .where(F.col("s_nationkey") != F.col("c_nationkey"))
-            .select(
-                F.least("s_nationkey", "c_nationkey").alias("a"),
-                F.greatest("s_nationkey", "c_nationkey").alias("b"),
-            )
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n_trades"))
-            .orderBy(F.desc("n_trades"), "a", "b")
-            .limit(_CN_TOP_EDGES)
-            .select("a", "b")
-        )
+        und = scoped_persist(_trade_top_und(spark, sf_dir))
         with _edge_window(und):
             return collect_release(degree_assortativity_from(und))
 
@@ -1129,23 +1082,9 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     node threshold. The extra cost over triangle counting is one
     node-keyed left join of two node-sized relations: free at any
     scale where triangles themselves are feasible."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     n = t(spark, sf_dir, "nation")
     with cache_scope():
-        und = scoped_persist(
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-            .where(F.col("s_nationkey") != F.col("c_nationkey"))
-            .select(
-                F.least("s_nationkey", "c_nationkey").alias("a"),
-                F.greatest("s_nationkey", "c_nationkey").alias("b"),
-            )
-            .distinct()
-        )
+        und = scoped_persist(_trade_und(spark, sf_dir))
         with _edge_window(und):
             out = clustering_coeff_from(und).join(
                 F.broadcast(n), F.col("node") == n.n_nationkey
@@ -1394,15 +1333,9 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches bit-for-bit, a stronger contract than pagerank's 6-dp
     rounding). Output: per nation, hub and authority mass in micro
     units."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     with cache_scope():
         edges = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+            _trades(spark, sf_dir)
             .groupBy(
                 F.col("s_nationkey").alias("src"),
                 F.col("c_nationkey").alias("dst"),
@@ -1492,26 +1425,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-law scale); the center-degree lookup is one |nodes|-row
     broadcast join on the wedge stream, and the non-adjacency filter
     one anti-join on the pair key."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     with cache_scope():
-        und = scoped_persist(
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-            .where(F.col("s_nationkey") != F.col("c_nationkey"))
-            .select(
-                F.least("s_nationkey", "c_nationkey").alias("a"),
-                F.greatest("s_nationkey", "c_nationkey").alias("b"),
-            )
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n_trades"))
-            .orderBy(F.desc("n_trades"), "a", "b")
-            .limit(_CN_TOP_EDGES)
-            .select("a", "b")
-        )
+        und = scoped_persist(_trade_top_und(spark, sf_dir))
         with _edge_window(und):
             return collect_release(adamic_adar_from(und))
 
@@ -1631,26 +1546,8 @@ def graph_jaccard_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     inherently Σdeg² (cap per-center lists at power-law scale), the
     two endpoint-degree lookups are |nodes|-row broadcast equi-joins,
     and the non-adjacency filter one anti-join on the pair key."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     with cache_scope():
-        und = scoped_persist(
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-            .where(F.col("s_nationkey") != F.col("c_nationkey"))
-            .select(
-                F.least("s_nationkey", "c_nationkey").alias("a"),
-                F.greatest("s_nationkey", "c_nationkey").alias("b"),
-            )
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n_trades"))
-            .orderBy(F.desc("n_trades"), "a", "b")
-            .limit(_CN_TOP_EDGES)
-            .select("a", "b")
-        )
+        und = scoped_persist(_trade_top_und(spark, sf_dir))
         with _edge_window(und):
             return collect_release(jaccard_linkpred_from(und))
 
@@ -1758,26 +1655,8 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at web scale is exactly the workload the ANF/HyperBall sketch
     family (rows-only territory) would replace — this operator IS
     their exactness oracle."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
     with cache_scope():
-        und = scoped_persist(
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-            .where(F.col("s_nationkey") != F.col("c_nationkey"))
-            .select(
-                F.least("s_nationkey", "c_nationkey").alias("a"),
-                F.greatest("s_nationkey", "c_nationkey").alias("b"),
-            )
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("n_trades"))
-            .orderBy(F.desc("n_trades"), "a", "b")
-            .limit(_CN_TOP_EDGES)
-            .select("a", "b")
-        )
+        und = scoped_persist(_trade_top_und(spark, sf_dir))
         with _edge_window(und):
             return collect_release(two_hop_reach_from(und))
 

@@ -3726,6 +3726,27 @@ def agg_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _OLS_EPOCH = "2024-01-01"
 
+
+def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``(event_type, x, y)`` daily event series the trend,
+    rank-correlation, changepoint, smoothing and seasonality kernels
+    share: x = days since ``_OLS_EPOCH``, y = that day's event count.
+    One map-side-combinable corpus exchange; the result is
+    domain-bounded (types × days rows). Not persisted here — callers
+    that read it more than once wrap it in ``scoped_persist``."""
+    return (
+        t(spark, sf_dir, "events", spread=True)
+        .select(
+            "event_type",
+            F.datediff(F.col("ts").cast("date"), F.lit(_OLS_EPOCH).cast("date"))
+            .cast("long")
+            .alias("x"),
+        )
+        .groupBy("event_type", "x")
+        .agg(F.count(F.lit(1)).cast("long").alias("y"))
+    )
+
+
 _OLS_ORACLE = f"""
     WITH daily AS (
         SELECT event_type,
@@ -3787,17 +3808,7 @@ def events_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized pass) then a |types|-group co-moment aggregate over
     ≤ types×days rows — the agg_corr_regr fused-moment shape, one
     exchange each."""
-    daily = (
-        t(spark, sf_dir, "events", spread=True)
-        .select(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit(_OLS_EPOCH).cast("date"))
-            .cast("long")
-            .alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-    )
+    daily = _daily_counts(spark, sf_dir)
     m = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum(F.col("x").cast("decimal(38,0)")).alias("sx"),
@@ -4165,17 +4176,7 @@ def agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     never corpus-sized; at a multi-year retention the day grain is
     still ~10³ rows per metric, and the O(n log n) inversion-count
     rewrite is the escape hatch long before the grain ever matters)."""
-    daily = scoped_persist(
-        t(spark, sf_dir, "events", spread=True)
-        .select(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit(_OLS_EPOCH).cast("date"))
-            .cast("long")
-            .alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-    )
+    daily = scoped_persist(_daily_counts(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
     pairs = (
         a.join(
@@ -4286,17 +4287,7 @@ def events_changepoint_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix window, candidate scoring, and argmax all run on that
     domain-bounded relation (days × types rows), partitioned by type —
     never a single-partition window, never a corpus-sized sort."""
-    daily = scoped_persist(
-        t(spark, sf_dir, "events", spread=True)
-        .select(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit(_OLS_EPOCH).cast("date"))
-            .cast("long")
-            .alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-    )
+    daily = scoped_persist(_daily_counts(spark, sf_dir))
     tot = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum("y").cast("decimal(38,0)").alias("s"),
@@ -4420,17 +4411,7 @@ def events_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the type key (≤ 28 history rows per anchor day by construction) —
     the join_range_bucket_equi shape without the bucketing, because
     the grain is already domain-bounded at any corpus size."""
-    daily = scoped_persist(
-        t(spark, sf_dir, "events", spread=True)
-        .select(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit(_OLS_EPOCH).cast("date"))
-            .cast("long")
-            .alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-    )
+    daily = scoped_persist(_daily_counts(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
     wlit = F.array(*[F.lit(w).cast("long") for w in _EWMA_W])
     hist = a.join(
@@ -4515,17 +4496,7 @@ def events_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: ONE corpus exchange to the day grain; both rollups and the
     5-row-to-35-row equi-join run on domain-bounded relations."""
-    daily = scoped_persist(
-        t(spark, sf_dir, "events", spread=True)
-        .select(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit(_OLS_EPOCH).cast("date"))
-            .cast("long")
-            .alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-    )
+    daily = scoped_persist(_daily_counts(spark, sf_dir))
     per_dow = daily.groupBy(
         "event_type", F.pmod(F.col("x"), F.lit(7)).cast("int").alias("dow")
     ).agg(
@@ -4695,17 +4666,7 @@ def events_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: ONE corpus exchange to the day grain; the dow rollup, type
     moments, and their equi-join all run on domain-bounded relations."""
-    daily = scoped_persist(
-        t(spark, sf_dir, "events", spread=True)
-        .select(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit(_OLS_EPOCH).cast("date"))
-            .cast("long")
-            .alias("x"),
-        )
-        .groupBy("event_type", "x")
-        .agg(F.count(F.lit(1)).cast("long").alias("y"))
-    )
+    daily = scoped_persist(_daily_counts(spark, sf_dir))
     per_dow = daily.groupBy(
         "event_type", F.pmod(F.col("x"), F.lit(7)).cast("int").alias("dow")
     ).agg(

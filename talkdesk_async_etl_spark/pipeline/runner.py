@@ -23,13 +23,12 @@ concurrency, one-Delta-commit-per-report.
 from __future__ import annotations
 
 import asyncio
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from typing import Iterator
 
 import pandas as pd
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from talkdesk_async_etl_spark.pipeline.config import (
     PipelineConfig,
@@ -61,7 +60,6 @@ class RunOutcome:
 
 
 async def _process_one(
-    spark: SparkSession | None,
     source: ReportSource,
     report_name: str,
     retries: int,
@@ -138,12 +136,12 @@ def run_pipeline(
     try:
         if profile == "distributed":
             results = _run_distributed(
-                spark, plan, source_factory or (lambda: source), cfg, from_date, to_date
+                plan, source_factory or (lambda: source), cfg, from_date, to_date
             )
         else:
             coros = [
                 _process_one(
-                    spark, source, r["report_name"], r["retries"], from_date, to_date,
+                    source, r["report_name"], r["retries"], from_date, to_date,
                     cfg.output_base_path,
                 )
                 for r in report_rows
@@ -161,7 +159,6 @@ def run_pipeline(
 
 
 def _run_distributed(
-    spark: SparkSession,
     plan,
     source_factory,
     cfg: PipelineConfig,
@@ -186,41 +183,22 @@ def _run_distributed(
         async def handle(pdf: pd.DataFrame) -> pd.DataFrame:
             coros = [
                 _process_one(
-                    None, source, row.report_name, int(row.retries), from_date, to_date, out_base
+                    source, row.report_name, int(row.retries), from_date, to_date, out_base
                 )
                 for row in pdf.itertuples()
             ]
-            results = await _gather_bounded(coros)
-            return pd.DataFrame(
-                {
-                    "report_name": [r.report_name for r in results],
-                    "status": [r.status for r in results],
-                    "rows_written": [r.rows_written for r in results],
-                    "error_message": [r.error_message or "" for r in results],
-                }
-            )
+            return pd.DataFrame([asdict(r) for r in await _gather_bounded(coros)])
 
         for pdf in batches:
             if len(pdf):
                 yield asyncio.run(handle(pdf))
 
-    status_df = (
-        plan.repartition(num_partitions)
-        .mapInPandas(
-            per_partition,
-            schema="report_name string, status string, rows_written int, error_message string",
-        )
+    # timestamp_ntz: the naive UTC times from utc_now() come back
+    # unchanged, whatever the session time zone.
+    status_df = plan.repartition(num_partitions).mapInPandas(
+        per_partition,
+        schema="report_name string, status string, rows_written int, output_path string,"
+        " error_message string, start_time timestamp_ntz, end_time timestamp_ntz",
     )
-    rows = status_df.collect()  # status rows only — bounded by report count
-    now = utc_now()
-    return [
-        ReportResult(
-            report_name=r["report_name"],
-            status=r["status"],
-            rows_written=r["rows_written"],
-            error_message=r["error_message"] or None,
-            start_time=now,
-            end_time=now,
-        )
-        for r in rows
-    ]
+    # status rows only — bounded by report count
+    return [ReportResult(**r.asDict()) for r in status_df.collect()]

@@ -19,8 +19,11 @@ register with ``oracle=None`` → the driver records a rows-only check.
 from __future__ import annotations
 
 import importlib
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -79,77 +82,27 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-# Driver-facing check order. The driver verifies exactly the first 50
-# registered queries per round, so ordering is budget allocation.
-# Round-16 window, in priority order (executes the r15 window's own
-# committed pre-plan — "Round-15 additions registered after THIS
-# window freezes lead the r16 window", and "window_sessionize_gap and
-# the r9+ tiers rotate r16+ (r8 first)"):
-#   1. The 32 round-15 additions (waves A-F) — the only registered
-#      ids with NO driver CORRECTNESS row in any round — in
-#      registration order.
-#   2. window_sessionize_gap (the last r8-latest id) + the 17 oldest
-#      r9-latest ids (alphabetical) fill the remaining slots. No
-#      rows-only id sits in this window, so CORRECTNESS_r16 can be
-#      50/50 hash-green.
-# Any id registered but absent here appends in registration order, so
-# new operators are never silently dropped — and the first-50
-# meta-test in tests/test_driver_profile.py fails on typos/miscounts.
-# The r9-tier remainder and the r10 tier rotate r17+.
-_PRIORITY = (
-    # --- tier 1: the 32 round-15 additions without a driver row ---
-    "window_conversion_latency",
-    "events_funnel_steps",
-    "dedup_levenshtein_verify",
-    "text_zipf_slope",
-    "text_tv_distance_sources",
-    "text_hapax_share",
-    "text_length_quartiles",
-    "sample_kfold_assign",
-    "sample_negative_pairs",
-    "events_ols_trend",
-    "agg_ab_cuped",
-    "events_wow_change",
-    "agg_kendall_tau",
-    "events_changepoint_binary",
-    "events_ewma_smooth",
-    "events_seasonal_decompose",
-    "agg_hhi_concentration",
-    "events_seasonality_strength",
-    "events_user_churn_weekly",
-    "events_hour_profile",
-    "graph_adamic_adar",
-    "graph_jaccard_link_pred",
-    "graph_two_hop_reach",
-    "ml_eval_pr_curve",
-    "ml_eval_roc_auc",
-    "ml_calibration_bins",
-    "agg_assoc_rules",
-    "ml_eval_confusion_multiclass",
-    "ml_eval_ndcg",
-    "ml_eval_brier",
-    "ml_eval_mrr",
-    "ml_eval_lift_table",
-    # --- tier 2: oldest-attested rotation (r8 first, then r9 alpha) ---
-    "window_sessionize_gap",
-    "agg_conditional_sum",
-    "agg_cooccurrence_pairs",
-    "agg_grouping_id",
-    "agg_percentile_approx_tol",
-    "agg_skew_kurtosis",
-    "agg_weighted_median",
-    "cdc_incremental_agg",
-    "csv_quoted_roundtrip",
-    "csv_roundtrip",
-    "ddl_default_columns",
-    "dedup_minhash_jaccard_est",
-    "dedup_simhash",
-    "dedup_simhash_dupes_ok",
-    "dedup_winnow_pairs",
-    "dq_expectations",
-    "graph_sssp_weighted",
-    "join_asof",
-)
+_REPO_DIR = Path(__file__).resolve().parents[2]
+_CORRECTNESS_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def check_order(specs: dict[str, QuerySpec], correctness_dir: str | Path) -> list[str]:
+    """Driver-facing check order over ``specs`` (registration order).
+    The driver verifies exactly the first 50 entries of ``queries()``,
+    so the order allocates that budget from the ``CORRECTNESS_r*.json``
+    files in ``correctness_dir``: oracle-backed ids before rows-only
+    ids; within each, ids with no row in any file first, then the
+    oldest last round that has a row for the id; registration order
+    breaks ties. With no files, registration order."""
+    last: dict[str, int] = {}
+    for path in Path(correctness_dir).iterdir():
+        m = _CORRECTNESS_FILE.fullmatch(path.name)
+        if m:
+            for name in json.loads(path.read_text()):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    if not last:
+        return list(specs)
+    return sorted(specs, key=lambda n: (specs[n].oracle is None, last.get(n, 0)))
 
 
 def load_all() -> dict[str, QuerySpec]:
@@ -157,7 +110,4 @@ def load_all() -> dict[str, QuerySpec]:
     registry ordered by driver-check priority."""
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
-    ordered = {name: QUERIES[name] for name in _PRIORITY if name in QUERIES}
-    for name, spec in QUERIES.items():
-        ordered.setdefault(name, spec)
-    return ordered
+    return {name: QUERIES[name] for name in check_order(QUERIES, _REPO_DIR)}

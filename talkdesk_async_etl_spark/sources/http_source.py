@@ -6,9 +6,8 @@ POST ``{base}{post_endpoint}`` → ``report_id``; poll/GET
 ``{base}{get_endpoint}?id=...`` → CSV text. Everything network-touching
 sits behind the ``ReportSource`` protocol:
 
-- ``HttpReportSource`` — aiohttp when available, else stdlib urllib
-  via ``asyncio.to_thread`` (this container has no aiohttp; the
-  fallback keeps the real HTTP path runnable and localhost-testable).
+- ``HttpReportSource`` — stdlib urllib driven through
+  ``asyncio.to_thread``; localhost-testable.
 - ``LocalFileReportSource`` — the test double: POST returns a fake
   report id, GET reads ``{fixture_dir}/{report_name}.csv``. Failure
   injection via a set of report names that raise a given status.
@@ -68,24 +67,11 @@ class LocalFileReportSource:
         return path.read_text(encoding="utf-8")
 
 
-def _aiohttp_available() -> bool:
-    try:
-        import aiohttp  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 class HttpReportSource:
     """HTTP production source (reference async_utils.py:77-129).
 
-    Prefers aiohttp (true async sockets, right for hundreds of
-    concurrent report fetches); when aiohttp is absent (this
-    container) it degrades to stdlib ``urllib`` driven through
-    ``asyncio.to_thread`` — same POST→GET semantics, thread-per-
-    in-flight-request instead of an event-loop socket, still bounded
-    by the runner's concurrency cap."""
+    Stdlib ``urllib`` driven through ``asyncio.to_thread``: one thread
+    per in-flight request, bounded by the runner's concurrency cap."""
 
     def __init__(
         self,
@@ -100,36 +86,6 @@ class HttpReportSource:
         self._get = get_endpoint
         self._tokens = token_manager
         self._timeout = timeout_sec
-        self._use_aiohttp = _aiohttp_available()
-
-    # -- one transport seam per verb; each returns (status, body) ------
-
-    async def _post_json(self, url: str, payload: dict, token: str) -> tuple[int, str]:
-        if self._use_aiohttp:
-            import aiohttp
-
-            async with aiohttp.ClientSession() as session:
-                async with session.post(
-                    url,
-                    json=payload,
-                    headers={"Authorization": f"Bearer {token}"},
-                    timeout=aiohttp.ClientTimeout(total=self._timeout),
-                ) as resp:
-                    return resp.status, await resp.text()
-        return await asyncio.to_thread(self._urllib_request, url, payload, token)
-
-    async def _get_text(self, url: str, token: str) -> tuple[int, str]:
-        if self._use_aiohttp:
-            import aiohttp
-
-            async with aiohttp.ClientSession() as session:
-                async with session.get(
-                    url,
-                    headers={"Authorization": f"Bearer {token}"},
-                    timeout=aiohttp.ClientTimeout(total=self._timeout),
-                ) as resp:
-                    return resp.status, await resp.text()
-        return await asyncio.to_thread(self._urllib_request, url, None, token)
 
     def _urllib_request(self, url: str, payload: dict | None, token: str) -> tuple[int, str]:
         import json
@@ -154,7 +110,8 @@ class HttpReportSource:
         import json
 
         token = await self._tokens.get_token()
-        status, body = await self._post_json(
+        status, body = await asyncio.to_thread(
+            self._urllib_request,
             f"{self._base}{self._post}",
             {"report": report_name, "from_date": from_date, "to_date": to_date},
             token,
@@ -167,8 +124,8 @@ class HttpReportSource:
         from urllib.parse import quote
 
         token = await self._tokens.get_token()
-        status, body = await self._get_text(
-            f"{self._base}{self._get}?id={quote(report_id)}", token
+        status, body = await asyncio.to_thread(
+            self._urllib_request, f"{self._base}{self._get}?id={quote(report_id)}", None, token
         )
         if status >= 400:
             raise HttpStatusError(status, body[:200])

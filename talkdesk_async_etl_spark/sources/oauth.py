@@ -10,8 +10,8 @@ this module only feeds.
 
 Transport is a plain synchronous callable ``(url, form) -> (status,
 body)`` so tests inject a fake without any network; the default is
-stdlib ``urllib`` (aiohttp is absent in this container) executed off
-the event loop via ``asyncio.to_thread``. Retries reuse the pipeline
+stdlib ``urllib`` executed off the event loop via
+``asyncio.to_thread``. Retries reuse the pipeline
 ``RetryPolicy`` — 429/5xx/transport retry, other 4xx final
 (reference DB:303-327).
 """

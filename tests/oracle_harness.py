@@ -62,9 +62,18 @@ def _normalize(cols: list[str], rows: list[tuple]) -> list[tuple]:
 
 def compare(spark, name: str, fn, oracle: str, sf_dir: str) -> list[str]:
     """Return a list of human-readable mismatch descriptions (empty = pass)."""
-    sdf = fn(spark, sf_dir)
-    s_cols = list(sdf.columns)
-    s_rows = [tuple(r) for r in sdf.collect()]
+    from talkdesk_async_etl_spark.plans.cache import release_scoped
+
+    try:
+        sdf = fn(spark, sf_dir)
+        s_cols = list(sdf.columns)
+        s_rows = [tuple(r) for r in sdf.collect()]
+    finally:
+        # Drop the query's scoped persists (as scripts/plan_audit.py
+        # does): a cache left behind is substituted into later plans
+        # that share its lineage, so plan pins in the same session would
+        # depend on which queries were compared before them.
+        release_scoped()
 
     con = duckdb_connect(sf_dir)
     try:

@@ -81,19 +81,56 @@ def test_all_query_outputs_are_atomic_typed(spark):
 
 
 def test_priority_window_is_exactly_the_first_50():
-    """The driver verifies ONLY the first 50 entries of ``queries()``;
-    ``_PRIORITY`` allocates that budget, and ``load_all`` silently
-    skips names that don't resolve. A typo'd id would therefore
-    silently burn a window slot on whatever query happens to append
-    next — this meta-test turns that into a loud failure."""
-    from talkdesk_async_etl_spark.plans.registry import _PRIORITY, load_all
+    """The driver verifies ONLY the first 50 entries of ``queries()``,
+    so ``load_all``'s order allocates that budget. It is derived from
+    the tracked CORRECTNESS_r*.json files: every registered id appears
+    exactly once, oracle-backed ids precede rows-only ids, and within
+    each class the last-attested round never decreases (0 = never
+    attested), registration order breaking ties."""
+    import json
+    import re
+    from pathlib import Path
 
-    assert len(_PRIORITY) == 50, f"window is {len(_PRIORITY)} ids, driver checks exactly 50"
-    assert len(set(_PRIORITY)) == 50, "duplicate id in _PRIORITY"
-    names = list(load_all())
-    missing = [n for n in _PRIORITY if n not in names]
-    assert not missing, f"_PRIORITY names not in registry: {missing}"
-    assert names[:50] == list(_PRIORITY)
+    from talkdesk_async_etl_spark.plans.registry import QUERIES, load_all
+
+    qs = load_all()
+    names = list(qs)
+    assert sorted(names) == sorted(QUERIES) and len(names) == len(set(names))
+    last: dict[str, int] = {}
+    for path in Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json"):
+        rnd = int(re.search(r"_r(\d+)\.json$", path.name).group(1))
+        for n in json.loads(path.read_text()):
+            last[n] = max(last.get(n, 0), rnd)
+    reg = list(QUERIES)
+    keys = [(qs[n].oracle is None, last.get(n, 0), reg.index(n)) for n in names]
+    assert keys == sorted(keys)
+    window = names[:50]
+    assert all(qs[n].oracle is not None for n in window), "rows-only id in window"
+
+
+def test_check_order_rule_on_fake_correctness_files(tmp_path):
+    """check_order on constructed files: never-attested ids lead, then
+    the oldest last round; a later round's row moves an id back;
+    registration order breaks ties; rows-only ids go last, even
+    never-attested ones; no files means registration order."""
+    import json
+
+    from talkdesk_async_etl_spark.plans.registry import QuerySpec, check_order
+
+    def spec(n, oracle="SELECT 1"):
+        return QuerySpec(name=n, fn=lambda s, d: None, oracle=oracle)
+
+    specs = {n: spec(n) for n in ("a", "b", "c", "d", "e")}
+    specs["r"] = spec("r", oracle=None)
+    specs["f"] = spec("f")
+    assert check_order(specs, tmp_path) == list(specs)
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"a": {}, "b": {}, "c": {}})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({"a": {}, "d": {}}))
+    (tmp_path / "CORRECTNESS_r02_extra.json").write_text(json.dumps({"b": {}}))
+    (tmp_path / "BENCH_r03.json").write_text(json.dumps({"c": {}}))
+    assert check_order(specs, tmp_path) == ["e", "f", "b", "c", "a", "d", "r"]
 
 
 def test_rows_only_query_set_is_pinned():

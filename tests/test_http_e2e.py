@@ -216,43 +216,3 @@ def test_observed_write_counts_in_the_write_job(spark, tmp_path):
         df.filter("id < 0"), str(tmp_path), "observed_empty", "2024-02-01", "2024-02-02"
     )
     assert n2 == 0
-
-
-@pytest.mark.skipif(
-    not __import__(
-        "talkdesk_async_etl_spark.sources.http_source", fromlist=["_aiohttp_available"]
-    )._aiohttp_available(),
-    reason="aiohttp not installed in this container (documented env block, "
-    "VERDICT r8 gap 4) — runs wherever aiohttp exists",
-)
-def test_aiohttp_transport_branch(api_server):
-    """Exercises the aiohttp transport branch of HttpReportSource
-    against the same localhost API the urllib-fallback e2e uses: OAuth
-    token fetch, bearer-authenticated POST→report_id, GET→CSV. The
-    urllib branch is covered by test_http_pipeline_end_to_end in every
-    environment; this closes the 'aiohttp branch is untested code'
-    gap in containers that have the library."""
-    import asyncio
-
-    from talkdesk_async_etl_spark.sources.http_source import HttpReportSource
-
-    tokens = TokenManager(
-        build_token_fetcher(
-            token_url=f"{api_server}/oauth/token", client_id="cid", client_secret="sec"
-        )
-    )
-    src = HttpReportSource(
-        base_url=api_server,
-        post_endpoint="/reports/generate",
-        get_endpoint="/reports/download",
-        token_manager=tokens,
-    )
-    assert src._use_aiohttp, "aiohttp importable but branch not selected"
-
-    async def flow():
-        rid = await src.generate_report_id("agent_activity", "2024-01-01", "2024-01-02")
-        return await src.download_report(rid)
-
-    csv_text = asyncio.run(flow())
-    assert csv_text.splitlines()[0] == "key,value"
-    assert "agent_activity,1" in csv_text

@@ -118,6 +118,14 @@ def test_pipeline_distributed_profile(spark, tmp_path, fixture_dir):
     )
     assert out.status == "SUCCESS" and out.ok == 3
     assert {r.report_name for r in out.results} == set(REPORTS)
+    # Per-report fields survive the mapInPandas round trip: the same
+    # output-path contract as driver-async, and each report's own
+    # executor-side start/end times.
+    for r in out.results:
+        assert r.output_path == os.path.join(
+            cfg.output_base_path, r.report_name, "2024-01-01_to_2024-01-02.csv"
+        )
+        assert r.start_time < r.end_time
 
 
 def test_retry_then_succeed_schedule(fixture_dir):
