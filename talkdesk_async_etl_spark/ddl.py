@@ -25,6 +25,7 @@ from talkdesk_async_etl_spark.schemas import (
     JOB_MONITORING_SCHEMA,
     REPORT_CONFIG_SCHEMA,
     REPORT_MONITORING_SCHEMA,
+    local_frame,
 )
 
 CONFIG_TABLES = {
@@ -97,7 +98,7 @@ def seed_config(spark: SparkSession, db: str) -> None:
         ("endpoint_config", ENDPOINT_CONFIG_SCHEMA, list(ENDPOINT_SEEDS)),
         ("report_config", REPORT_CONFIG_SCHEMA, list(REPORT_SEEDS)),
     ):
-        seed_df = spark.createDataFrame(rows, schema)
+        seed_df = local_frame(spark, rows, schema)
         existing = spark.table(f"{db}.{name}")
         missing = seed_df.join(existing, on=list(seed_df.columns), how="left_anti")
         missing.write.mode("append").insertInto(f"{db}.{name}")

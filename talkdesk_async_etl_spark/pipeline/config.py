@@ -15,7 +15,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from talkdesk_async_etl_spark.schemas import ENDPOINT_CONFIG_SCHEMA, REPORT_CONFIG_SCHEMA
+from talkdesk_async_etl_spark.schemas import (
+    ENDPOINT_CONFIG_SCHEMA,
+    REPORT_CONFIG_SCHEMA,
+    local_frame,
+)
 
 
 @dataclass(frozen=True)
@@ -74,15 +78,18 @@ def from_json_doc(doc: dict, env: str = "dev") -> PipelineConfig:
 
 def config_dataframes(spark: SparkSession, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
     """Config as DataFrames with the reference's exact schemas — the
-    relational form the planner works on."""
-    report_df = spark.createDataFrame(
+    relational form the planner works on. Both are local relations, so
+    collecting the plan runs no Python worker."""
+    report_df = local_frame(
+        spark,
         [
             (r.report_name, r.enabled, r.endpoint_type, r.retries, r.timeout_sec, r.env)
             for r in cfg.reports
         ],
         REPORT_CONFIG_SCHEMA,
     )
-    endpoint_df = spark.createDataFrame(
+    endpoint_df = local_frame(
+        spark,
         [
             (e.endpoint_type, e.base_url, e.auth_endpoint, e.post_endpoint, e.get_endpoint, e.env)
             for e in cfg.endpoints

@@ -29,7 +29,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from talkdesk_async_etl_spark.schemas import JOB_MONITORING_SCHEMA, REPORT_MONITORING_SCHEMA
+from talkdesk_async_etl_spark.schemas import (
+    JOB_MONITORING_SCHEMA,
+    REPORT_MONITORING_SCHEMA,
+    local_frame,
+)
 
 
 def new_run_id() -> str:
@@ -133,7 +137,7 @@ class MergeMonitoringStore:
         # view is dropped after the statement so the catalog doesn't
         # accumulate one view per merge.
         src = f"_merge_src_{table}_{uuid.uuid4().hex}"
-        self.spark.createDataFrame(rows, schema).createOrReplaceTempView(src)
+        local_frame(self.spark, rows, schema).createOrReplaceTempView(src)
         try:
             cond = " AND ".join(f"t.{k} = s.{k}" for k in on)
             sets = ", ".join(f"t.{c} = s.{c}" for c in update_cols)
@@ -211,14 +215,17 @@ class MonitoringStore:
         self.report_path = os.path.join(base_dir, "report_monitoring")
 
     # -- writes (append-only; each is one tiny Spark write job) --------
+    # The rows are a local relation (schemas.local_frame): the write job
+    # runs no Python worker.
+
+    def _append(self, rows: list[tuple], schema, path: str) -> None:
+        local_frame(self.spark, rows, schema).write.mode("append").parquet(path)
 
     def log_job_start(self, run_id: str, from_date: str, to_date: str, total_reports: int) -> None:
         row = [
             (run_id, from_date, to_date, utc_now(), None, "RUNNING", total_reports, None, None, None)
         ]
-        self.spark.createDataFrame(row, JOB_MONITORING_SCHEMA).write.mode("append").parquet(
-            self.job_path
-        )
+        self._append(row, JOB_MONITORING_SCHEMA, self.job_path)
 
     def log_job_end(
         self, run_id: str, from_date: str, to_date: str, total: int, ok: int, fail: int,
@@ -226,9 +233,7 @@ class MonitoringStore:
     ) -> str:
         status = derive_job_status(total, ok, fail) if error_message is None else "FAILED"
         row = [(run_id, from_date, to_date, None, utc_now(), status, total, ok, fail, error_message)]
-        self.spark.createDataFrame(row, JOB_MONITORING_SCHEMA).write.mode("append").parquet(
-            self.job_path
-        )
+        self._append(row, JOB_MONITORING_SCHEMA, self.job_path)
         return status
 
     def log_reports(self, run_id: str, from_date: str, to_date: str, results: list[ReportResult]) -> None:
@@ -244,9 +249,7 @@ class MonitoringStore:
             )
             for r in results
         ]
-        self.spark.createDataFrame(rows, REPORT_MONITORING_SCHEMA).write.mode("append").parquet(
-            self.report_path
-        )
+        self._append(rows, REPORT_MONITORING_SCHEMA, self.report_path)
 
     # -- reads ----------------------------------------------------------
 

@@ -23,6 +23,8 @@ concurrency, one-Delta-commit-per-report.
 from __future__ import annotations
 
 import asyncio
+import io
+import os
 from dataclasses import asdict, dataclass
 from typing import Iterator
 
@@ -70,24 +72,26 @@ async def _process_one(
     """One report: POST id → GET CSV → count rows → write CSV
     (reference DB:390-471). Row counting uses pandas exactly as the
     reference does (DB:437); the engine-side normalize-to-parquet path
-    is a separate batch stage (sources.io.read_csv)."""
-    import io
-    import os
-
+    is a separate batch stage (sources.io.read_csv). The payload is
+    written as the bytes served."""
     start = utc_now()
     policy = RetryPolicy(max_attempts=max(1, retries))
     try:
-        csv_text = await fetch_report_csv(source, report_name, from_date, to_date, policy)
-        pdf = pd.read_csv(io.StringIO(csv_text)) if csv_text.strip() else pd.DataFrame()
+        body = await fetch_report_csv(source, report_name, from_date, to_date, policy)
+        # Blank by the text rule: str.strip() also drops NBSP, the
+        # \x1c-\x1f separators and other Unicode spaces, which
+        # bytes.strip() keeps.
+        blank = not body.decode("utf-8", errors="replace").strip()
+        rows = 0 if blank else len(pd.read_csv(io.BytesIO(body), encoding_errors="replace"))
         out_dir = os.path.join(output_base, report_name)
         os.makedirs(out_dir, exist_ok=True)
         out_path = os.path.join(out_dir, f"{from_date}_to_{to_date}.csv")
-        with open(out_path, "w", encoding="utf-8") as fh:
-            fh.write(csv_text)
+        with open(out_path, "wb") as fh:
+            fh.write(body)
         return ReportResult(
             report_name=report_name,
             status="SUCCESS",
-            rows_written=len(pdf),
+            rows_written=rows,
             output_path=out_path,
             start_time=start,
             end_time=utc_now(),
@@ -136,7 +140,8 @@ def run_pipeline(
     try:
         if profile == "distributed":
             results = _run_distributed(
-                plan, source_factory or (lambda: source), cfg, from_date, to_date
+                plan, len(report_rows), source_factory or (lambda: source), cfg,
+                from_date, to_date,
             )
         else:
             coros = [
@@ -160,6 +165,7 @@ def run_pipeline(
 
 def _run_distributed(
     plan,
+    n_reports: int,
     source_factory,
     cfg: PipelineConfig,
     from_date: str,
@@ -172,9 +178,10 @@ def _run_distributed(
 
     ``source_factory`` must be picklable (executors build their own
     source/session — reference DIST:70-76 does the same per-partition).
+    ``n_reports`` is the plan's row count, already collected by the
+    caller; it sizes the partitions without another job.
     """
-    n = plan.count()
-    num_partitions = max(1, -(-n // PARTITION_TARGET_SIZE))
+    num_partitions = max(1, -(-n_reports // PARTITION_TARGET_SIZE))
     out_base = cfg.output_base_path
 
     def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

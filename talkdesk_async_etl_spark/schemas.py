@@ -10,7 +10,35 @@ inferred schema is recorded with the sink.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: T.StructType) -> DataFrame:
+    """A small driver-side frame (config, monitoring rows) as a
+    ``LocalRelation`` built from an Arrow table typed by ``schema``.
+
+    ``createDataFrame`` on a list of tuples plans a ``parallelize``
+    (``LogicalRDD``) whose every job needs a Python worker; an Arrow
+    table ships to the JVM once and its jobs run no Python. Timestamps
+    travel as ``timestamp[us, tz=UTC]``: a naive datetime (``utc_now()``)
+    is stored as that UTC instant, whatever the process or session time
+    zone. A ``None`` in a non-null field, a wrong type or an int32
+    overflow raises ``ValueError`` or ``TypeError``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
 
 # --- Config domain (reference ddl/ddl_talkdesk_config.py:10-34) ---------
 

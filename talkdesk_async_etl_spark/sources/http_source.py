@@ -3,14 +3,15 @@ ingestion boundary, pluggable so tests run without a network.
 
 The reference's flow (async_utils.py:77-129, DB:330-382):
 POST ``{base}{post_endpoint}`` → ``report_id``; poll/GET
-``{base}{get_endpoint}?id=...`` → CSV text. Everything network-touching
-sits behind the ``ReportSource`` protocol:
+``{base}{get_endpoint}?id=...`` → CSV payload. The payload stays the
+bytes as served, from socket to sink: no decode, no re-encode.
+Everything network-touching sits behind the ``ReportSource`` protocol:
 
 - ``HttpReportSource`` — stdlib urllib driven through
   ``asyncio.to_thread``; localhost-testable.
 - ``LocalFileReportSource`` — the test double: POST returns a fake
-  report id, GET reads ``{fixture_dir}/{report_name}.csv``. Failure
-  injection via a set of report names that raise a given status.
+  report id, GET returns the bytes of ``{fixture_dir}/{report_name}.csv``.
+  Failure injection via a set of report names that raise a given status.
 
 Both honor the per-report RetryPolicy and the TokenManager — identical
 retry/backoff semantics to the reference (E4/E5).
@@ -30,8 +31,8 @@ from talkdesk_async_etl_spark.pipeline.token import TokenManager
 class ReportSource(Protocol):
     async def generate_report_id(self, report_name: str, from_date: str, to_date: str) -> str: ...
 
-    async def download_report(self, report_id: str) -> str:
-        """Returns the report payload as CSV text."""
+    async def download_report(self, report_id: str) -> bytes:
+        """Returns the report payload: CSV bytes, exactly as served."""
         ...
 
 
@@ -53,7 +54,7 @@ class LocalFileReportSource:
         self.calls.append(("post", report_name))
         return f"{report_name}:{from_date}:{to_date}"
 
-    async def download_report(self, report_id: str) -> str:
+    async def download_report(self, report_id: str) -> bytes:
         report_name = report_id.split(":", 1)[0]
         self.calls.append(("get", report_name))
         if report_name in self.fail_reports:
@@ -64,7 +65,7 @@ class LocalFileReportSource:
         path = Path(self.fixture_dir) / f"{report_name}.csv"
         if not path.exists():
             raise HttpStatusError(404, f"no fixture for {report_name}")
-        return path.read_text(encoding="utf-8")
+        return path.read_bytes()
 
 
 class HttpReportSource:
@@ -87,7 +88,7 @@ class HttpReportSource:
         self._tokens = token_manager
         self._timeout = timeout_sec
 
-    def _urllib_request(self, url: str, payload: dict | None, token: str) -> tuple[int, str]:
+    def _urllib_request(self, url: str, payload: dict | None, token: str) -> tuple[int, bytes]:
         import json
         import urllib.error
         import urllib.request
@@ -100,9 +101,9 @@ class HttpReportSource:
         req = urllib.request.Request(url, data=data, headers=headers)
         try:
             with urllib.request.urlopen(req, timeout=self._timeout) as resp:  # noqa: S310
-                return resp.status, resp.read().decode("utf-8", errors="replace")
+                return resp.status, resp.read()
         except urllib.error.HTTPError as exc:
-            return exc.code, exc.read().decode("utf-8", errors="replace")
+            return exc.code, exc.read()
 
     # -- ReportSource protocol -----------------------------------------
 
@@ -117,10 +118,10 @@ class HttpReportSource:
             token,
         )
         if status >= 400:
-            raise HttpStatusError(status, body[:200])
-        return str(json.loads(body)["report_id"])
+            raise HttpStatusError(status, _error_text(body))
+        return str(json.loads(body.decode("utf-8", errors="replace"))["report_id"])
 
-    async def download_report(self, report_id: str) -> str:
+    async def download_report(self, report_id: str) -> bytes:
         from urllib.parse import quote
 
         token = await self._tokens.get_token()
@@ -128,8 +129,13 @@ class HttpReportSource:
             self._urllib_request, f"{self._base}{self._get}?id={quote(report_id)}", None, token
         )
         if status >= 400:
-            raise HttpStatusError(status, body[:200])
+            raise HttpStatusError(status, _error_text(body))
         return body
+
+
+def _error_text(body: bytes) -> str:
+    """The head of an error response, for the exception message."""
+    return body.decode("utf-8", errors="replace")[:200]
 
 
 async def fetch_report_csv(
@@ -139,9 +145,9 @@ async def fetch_report_csv(
     to_date: str,
     policy: RetryPolicy,
     sleep=asyncio.sleep,
-) -> str:
+) -> bytes:
     """POST→GET with the reference's retry semantics applied to each
-    call independently (DB:330-382)."""
+    call independently (DB:330-382); returns the CSV payload bytes."""
 
     async def _post():
         return await source.generate_report_id(report_name, from_date, to_date)

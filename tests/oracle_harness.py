@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import os
 from decimal import Decimal
 
 import duckdb
@@ -26,7 +27,23 @@ EXPECT_EMPTY = frozenset({"dedup_lsh_containment", "dedup_winnow_containment"})
 
 
 def duckdb_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """An in-memory DuckDB with views over the fixture tables, bounded:
+    a quarter of physical memory, the engine's core count
+    (``SPARK_GRAFT_CPUS``) and no spill to disk. With DuckDB's defaults
+    (80 % of memory, every core, spill into ``.tmp/`` under the working
+    directory) one runaway oracle fills the host's memory and then its
+    disk. duckdb 1.0.0 does not enforce ``max_temp_directory_size`` on
+    its spill files (a 1 GB cap let the sf0.1 triangle oracle write
+    19.7 GB), so the bound is no spill at all: an oracle that outgrows
+    the memory limit fails with DuckDB's out-of-memory error."""
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 // 2**20
+    con = duckdb.connect(
+        config={
+            "memory_limit": f"{mem_mb}MB",
+            "threads": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1),
+            "temp_directory": "",
+        }
+    )
     for name in TESTDATA_TABLES:
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
     return con

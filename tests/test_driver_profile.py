@@ -69,11 +69,17 @@ def test_all_query_outputs_are_atomic_typed(spark):
     query must emit only atomic columns."""
     from pyspark.sql import types as T
 
+    from talkdesk_async_etl_spark.plans.cache import release_scoped
     from talkdesk_async_etl_spark.plans.registry import load_all
 
     offenders = []
     for name, spec in load_all().items():
-        schema = spec.fn(spark, "/root/testdata/sf0.001").schema
+        try:
+            schema = spec.fn(spark, "/root/testdata/sf0.001").schema
+        finally:
+            # A build's scoped persists would otherwise stay cached in
+            # the shared session and change later queries' plans.
+            release_scoped()
         for f in schema.fields:
             if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType, T.BinaryType)):
                 offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")

@@ -22,8 +22,15 @@ def test_oracle_parity(spark, name, spec):
 def test_rows_only_queries_run(spark):
     """Queries without an oracle still must execute and return a stable
     schema (the driver's weaker rows-only check)."""
+    from talkdesk_async_etl_spark.plans.cache import release_scoped
+
     for name, spec in load_all().items():
         if spec.oracle is None:
-            df = spec.fn(spark, SF_ORACLE)
-            assert df.columns, name
-            df.limit(5).collect()
+            try:
+                df = spec.fn(spark, SF_ORACLE)
+                assert df.columns, name
+                df.limit(5).collect()
+            finally:
+                # As in oracle_harness.compare: no scoped persist
+                # outlives its query in the shared session.
+                release_scoped()

@@ -30,6 +30,7 @@ from talkdesk_async_etl_spark.pipeline.monitoring import MonitoringStore, Report
 from talkdesk_async_etl_spark.pipeline.retry import HttpStatusError, RetryPolicy, is_retriable
 from talkdesk_async_etl_spark.pipeline.runner import run_pipeline
 from talkdesk_async_etl_spark.pipeline.token import TokenManager
+from talkdesk_async_etl_spark.schemas import local_frame
 from talkdesk_async_etl_spark.sources.http_source import LocalFileReportSource, fetch_report_csv
 
 REPORTS = ("agent_activity", "call_volume", "queue_activity")
@@ -141,10 +142,59 @@ def test_retry_then_succeed_schedule(fixture_dir):
     text = asyncio.run(
         fetch_report_csv(source, "call_volume", "2024-01-01", "2024-01-02", policy, sleep=fake_sleep)
     )
-    assert text.startswith("key,value")
+    assert text.startswith(b"key,value")
     assert delays == [1.0, 2.0]  # attempts 1 and 2 failed → backoff 1s, 2s
     # POST once (never failed), GET three times (2 failures + success).
     assert source.calls.count(("get", "call_volume")) == 3
+
+
+# (name, served bytes): payloads whose blank check, row count or bytes
+# a text round-trip could get wrong.
+_PAYLOADS = [
+    ("empty", b""),
+    ("ascii_whitespace", b" \n\t\r\n  \x0b\x0c\n"),
+    ("nbsp_lines", "\xa0\n\xa0\n".encode()),
+    ("separator_lines", "\x1c\n\x1d\x1e\x1f\n\u2003\n".encode()),
+    ("header_only", b"key,value\n"),
+    ("crlf", b"key,value\r\na,1\r\nb,2\r\n"),
+    ("quoted_newline", b'key,value\na,"x\ny"\nb,2\n'),
+    ("blank_lines", b"key,value\n\na,1\n\n\nb,2\n\n"),
+    ("utf8_bom", b"\xef\xbb\xbfkey,value\na,1\nb,2\n"),
+    ("invalid_utf8", b"key,value\na,\xff\xfe\nb,\xc3\n\xe2\x82,3\n"),
+    ("nbsp_then_data", "\xa0\nkey,value\na,1\n".encode()),
+    ("too_many_fields", b"key,value\na,1\nb,2,3\n"),
+]
+
+
+@pytest.mark.parametrize("body", [b for _, b in _PAYLOADS], ids=[n for n, _ in _PAYLOADS])
+def test_payload_bytes_match_the_text_rule(tmp_path, body):
+    """The bytes path counts rows and succeeds or fails exactly as the
+    text rule it replaced (decode with replacement, blank by
+    ``str.strip``, ``pd.read_csv`` over the text), and writes the served
+    bytes unchanged."""
+    import io
+
+    import pandas as pd
+
+    from talkdesk_async_etl_spark.pipeline.runner import _process_one
+
+    text = body.decode("utf-8", "replace")
+    try:
+        expected = ("SUCCESS", len(pd.read_csv(io.StringIO(text))) if text.strip() else 0)
+    except ValueError:  # pandas' ParserError: the report fails
+        expected = ("FAILED", 0)
+
+    fx = tmp_path / "fx"
+    fx.mkdir()
+    (fx / "r.csv").write_bytes(body)
+    out = asyncio.run(
+        _process_one(LocalFileReportSource(str(fx)), "r", 1, "2024-01-01", "2024-01-02",
+                     str(tmp_path / "out"))
+    )
+    assert (out.status, out.rows_written) == expected, out.error_message
+    if out.status == "SUCCESS":
+        with open(out.output_path, "rb") as fh:
+            assert fh.read() == body
 
 
 def test_retry_final_4xx_no_retry(fixture_dir):
@@ -269,6 +319,96 @@ def test_config_plan_filters_and_join(spark, tmp_path):
     plan = build_report_plan(report_df, endpoint_df, "prod").collect()
     assert len(plan) == 1
     assert plan[0]["report_name"] == "a" and plan[0]["base_url"] == "https://x"
+
+
+def test_driver_frames_are_local_relations(spark, tmp_path, monkeypatch):
+    """The config frames and every monitoring append source are
+    ``LocalRelation`` plans: no ``LogicalRDD``, whose jobs each need a
+    Python worker."""
+    from talkdesk_async_etl_spark.pipeline import monitoring
+
+    frames = []
+
+    def recording(*a):
+        frames.append(local_frame(*a))
+        return frames[-1]
+
+    monkeypatch.setattr(monitoring, "local_frame", recording)
+    mon = MonitoringStore(spark, str(tmp_path / "mon"))
+    mon.log_job_start("run1", "2024-01-01", "2024-01-02", 1)
+    mon.log_reports("run1", "2024-01-01", "2024-01-02", [ReportResult("r", "SUCCESS", 3)])
+    mon.log_job_end("run1", "2024-01-01", "2024-01-02", 1, 1, 0)
+    assert len(frames) == 3
+    for df in (*config_dataframes(spark, make_cfg(tmp_path)), *frames):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_local_frame_rejects_what_the_schema_forbids(spark):
+    """A None in a non-null field, a wrong type, an int32 overflow and a
+    row of the wrong width all raise; none is stored as NULL or
+    truncated."""
+    from talkdesk_async_etl_spark.schemas import REPORT_CONFIG_SCHEMA
+
+    good = ("r", True, "standard", 3, 30, "dev")
+    assert local_frame(spark, [good], REPORT_CONFIG_SCHEMA).collect()[0]["retries"] == 3
+    bad_rows = [
+        (None, True, "standard", 3, 30, "dev"),  # None in a non-null field
+        ("r", True, "standard", "three", 30, "dev"),  # str in an int field
+        ("r", True, "standard", 3, 2**31, "dev"),  # int32 overflow
+        ("r", True, 7, 3, 30, "dev"),  # int in a string field
+        ("r", True, "standard", 3, 30),  # one field short
+    ]
+    for row in bad_rows:
+        with pytest.raises((ValueError, TypeError)):
+            local_frame(spark, [row], REPORT_CONFIG_SCHEMA)
+    with pytest.raises(ValueError):
+        local_frame(spark, [good, good[:5]], REPORT_CONFIG_SCHEMA)  # ragged rows
+
+
+def test_monitoring_times_are_utc_instants_in_any_time_zone(spark, tmp_path, monkeypatch):
+    """The naive UTC times the runner records are stored as those UTC
+    instants even when the process and the session are in other,
+    different time zones."""
+    import datetime as dt
+    import time
+
+    from talkdesk_async_etl_spark.pipeline import monitoring
+
+    start = dt.datetime(2024, 1, 1, 12, 0, 0, 123456)
+    end = dt.datetime(2024, 7, 1, 8, 30, 0, 654321)  # other side of a DST change
+
+    def micros(t):
+        return (t - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+
+    monkeypatch.setattr(monitoring, "utc_now", lambda: start)
+    old_tz = os.environ.get("TZ")
+    old_session_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        os.environ["TZ"] = "America/New_York"
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+        mon = MonitoringStore(spark, str(tmp_path / "mon_tz"))
+        mon.log_job_start("run1", "2024-01-01", "2024-01-02", 1)
+        mon.log_reports(
+            "run1", "2024-01-01", "2024-01-02",
+            [ReportResult("r", "SUCCESS", 1, start_time=start, end_time=end)],
+        )
+        job = spark.read.parquet(mon.job_path).selectExpr("unix_micros(start_time)").first()[0]
+        rep = (
+            spark.read.parquet(mon.report_path)
+            .selectExpr("unix_micros(start_time)", "unix_micros(end_time)")
+            .first()
+        )
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", old_session_tz)
+    assert job == micros(start)
+    assert tuple(rep) == (micros(start), micros(end))
 
 
 def test_config_from_json_doc_shapes():
