@@ -71,11 +71,12 @@ def test_all_query_outputs_are_atomic_typed(spark):
 
     from talkdesk_async_etl_spark.plans.cache import release_scoped
     from talkdesk_async_etl_spark.plans.registry import load_all
+    from tests.conftest import SF_SMALL
 
     offenders = []
     for name, spec in load_all().items():
         try:
-            schema = spec.fn(spark, "/root/testdata/sf0.001").schema
+            schema = spec.fn(spark, SF_SMALL).schema
         finally:
             # A build's scoped persists would otherwise stay cached in
             # the shared session and change later queries' plans.
