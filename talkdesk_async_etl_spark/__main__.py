@@ -28,7 +28,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--from-date", dest="from_date", default=None)
     p.add_argument("--to-date", dest="to_date", default=None)
     p.add_argument("--profile", choices=("driver-async", "distributed"), default="driver-async")
-    p.add_argument("--monitoring-dir", default="/tmp/tde_monitoring")
+    p.add_argument(
+        "--monitoring-dir",
+        default="/tmp/tde_monitoring",
+        help="local directory of the parquet monitoring tables (a path or a file: URI; "
+        "remote URIs such as abfss:// or s3a:// are rejected, as the appends are "
+        "local file writes)",
+    )
     p.add_argument(
         "--fixture-dir",
         default=None,

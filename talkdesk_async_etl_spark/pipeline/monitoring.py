@@ -3,11 +3,13 @@
 One interface, two backends (the reference has two stores: Delta
 tables on Databricks, DB:208-278, and SQLite locally, MON:21-147):
 
-- ``MonitoringStore`` — append-only parquet; the reference's SQL
-  ``UPDATE job_monitoring`` (DB:245-253) becomes append-then-
-  latest-wins: job close appends a second row per run_id and readers
-  take the latest by end_time/row order (the W1 window pattern) — the
-  plan that still works when the sink is an immutable table.
+- ``MonitoringStore`` — append-only parquet in a local directory; the
+  reference's SQL ``UPDATE job_monitoring`` (DB:245-253) becomes
+  append-then-latest-wins: job close appends a second row per run_id
+  and readers take the latest by end_time/row order (the W1 window
+  pattern) — the plan that still works when the sink is an immutable
+  table. Appends are pyarrow file writes, like the reference's local
+  SQLite inserts (MON:21-147), not Spark jobs; reads are Spark.
 - ``MergeMonitoringStore`` — catalog tables with ``MERGE INTO``
   upserts, selected by ``make_monitoring_store`` when a
   MERGE-capable format (Delta) is on the classpath.
@@ -32,8 +34,10 @@ from pyspark.sql import functions as F
 from talkdesk_async_etl_spark.schemas import (
     JOB_MONITORING_SCHEMA,
     REPORT_MONITORING_SCHEMA,
+    arrow_table,
     local_frame,
 )
+from talkdesk_async_etl_spark.sources.io import os_path
 
 
 def new_run_id() -> str:
@@ -206,20 +210,48 @@ class MergeMonitoringStore:
 
 
 class MonitoringStore:
-    """Parquet-append monitoring sink with latest-wins reads."""
+    """Parquet-append monitoring sink with latest-wins reads, in a local
+    directory (``base_dir``; a ``file:`` URI with no remote authority
+    is accepted). A remote URI raises ``ValueError``: the appends are
+    local file writes. Remote tables go through
+    ``make_monitoring_store(..., catalog_db=...)`` and
+    ``MergeMonitoringStore``."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
-        self.base = base_dir
-        self.job_path = os.path.join(base_dir, "job_monitoring")
-        self.report_path = os.path.join(base_dir, "report_monitoring")
+        self.base = os_path(
+            base_dir,
+            "MonitoringStore appends with local file writes and needs a local directory",
+            "For remote monitoring tables use make_monitoring_store(spark, base_dir, "
+            "catalog_db=...), which selects MergeMonitoringStore when Delta is available.",
+        )
+        self.job_path = os.path.join(self.base, "job_monitoring")
+        self.report_path = os.path.join(self.base, "report_monitoring")
 
-    # -- writes (append-only; each is one tiny Spark write job) --------
-    # The rows are a local relation (schemas.local_frame): the write job
-    # runs no Python worker.
+    # -- writes (append-only; each is one parquet file, no Spark job) --
 
     def _append(self, rows: list[tuple], schema, path: str) -> None:
-        local_frame(self.spark, rows, schema).write.mode("append").parquet(path)
+        """Write ``rows`` as one new parquet file in ``path``.
+
+        The table is built first (``schemas.arrow_table``), so a row the
+        schema forbids raises before anything touches the directory.
+        The file is written under a hidden name and renamed into place:
+        Spark's file index skips dot-files, so a reader never sees a
+        partial file, and a failed write leaves no file. Each append has
+        its own uuid name, so concurrent appends share nothing."""
+        import pyarrow.parquet as pq
+
+        table = arrow_table(rows, schema)
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(path, f".{name}")
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(path, name))
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     def log_job_start(self, run_id: str, from_date: str, to_date: str, total_reports: int) -> None:
         row = [

@@ -16,28 +16,41 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: T.StructType) -> DataFrame:
-    """A small driver-side frame (config, monitoring rows) as a
-    ``LocalRelation`` built from an Arrow table typed by ``schema``.
+def arrow_table(rows: Sequence[tuple], schema: T.StructType):
+    """``rows`` as a ``pyarrow.Table`` typed by ``to_arrow_schema(schema)``:
+    the one conversion behind every driver-side small frame and every
+    monitoring parquet append.
 
-    ``createDataFrame`` on a list of tuples plans a ``parallelize``
-    (``LogicalRDD``) whose every job needs a Python worker; an Arrow
-    table ships to the JVM once and its jobs run no Python. Timestamps
-    travel as ``timestamp[us, tz=UTC]``: a naive datetime (``utc_now()``)
-    is stored as that UTC instant, whatever the process or session time
-    zone. A ``None`` in a non-null field, a wrong type or an int32
-    overflow raises ``ValueError`` or ``TypeError``.
+    Timestamps travel as ``timestamp[us, tz=UTC]``: a naive datetime
+    (``utc_now()``) is stored as that UTC instant, whatever the process
+    or session time zone. A ``None`` in a non-null field, a wrong type,
+    an int32 overflow or a row of the wrong width raises ``ValueError``
+    or ``TypeError``.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema, strict=True)],
-        schema=arrow_schema,
-    )
-    return spark.createDataFrame(table, schema)
+    arrays = [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema, strict=True)]
+    for array, f in zip(arrays, arrow_schema):
+        # pyarrow builds a table without checking nullability (Spark's
+        # Arrow cast in createDataFrame does); check here so that a
+        # parquet append rejects the same rows as a frame.
+        if array.null_count and not f.nullable:
+            raise ValueError(f"None in non-null field {f.name!r}")
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: T.StructType) -> DataFrame:
+    """A small driver-side frame (config rows, MERGE sources, DDL seeds)
+    as a ``LocalRelation`` built from ``arrow_table(rows, schema)``.
+
+    ``createDataFrame`` on a list of tuples plans a ``parallelize``
+    (``LogicalRDD``) whose every job needs a Python worker; an Arrow
+    table ships to the JVM once and its jobs run no Python.
+    """
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
 
 
 # --- Config domain (reference ddl/ddl_talkdesk_config.py:10-34) ---------

@@ -106,6 +106,35 @@ def csv_from_text(spark: SparkSession, csv_text: str) -> DataFrame:
     return spark.createDataFrame(pdf)
 
 
+def os_path(path: str, why: str, remedy: str) -> str:
+    """``path`` as an os-level path, for writers that use ``os``/``open``
+    rather than the Hadoop filesystem layer.
+
+    ``file:`` URIs ARE local: ``file:/x``, ``file:///x`` and
+    ``file://localhost/x`` all mean ``/x``. A non-empty authority
+    (``file://nas01/exports``) names a remote share, and folding it into
+    a local path would silently write to the wrong place, so it raises
+    ``ValueError``, as does any other URI scheme (``s3a://``,
+    ``abfss://``, ``dbfs:/``): ``os.makedirs`` would create a local
+    directory named after the scheme. The message is ``why``, the
+    offending part, then ``remedy``."""
+    scheme = re.match(r"^[A-Za-z][A-Za-z0-9+.-]*(?=:/)", path)
+    if scheme is None:
+        return path
+    if scheme.group(0).lower() != "file":
+        raise ValueError(f"{why}; got URI scheme {scheme.group(0)!r} in {path!r}. {remedy}")
+    rest = path[len(scheme.group(0)) + 1 :]
+    if not rest.startswith("//"):
+        return rest
+    authority, _, local = rest[2:].partition("/")
+    if authority not in ("", "localhost"):
+        raise ValueError(
+            f"{why}; file: URI with remote authority {authority!r} in {path!r} "
+            f"is not local. {remedy}"
+        )
+    return "/" + local
+
+
 def write_csv_report(
     df: DataFrame,
     base: str,
@@ -140,33 +169,16 @@ def write_csv_report(
     if not single_file:
         df.write.mode("overwrite").option("header", True).csv(out)
         return out
-    scheme = re.match(r"^[A-Za-z][A-Za-z0-9+.-]*(?=:/)", base)
-    if scheme and scheme.group(0).lower() == "file":
-        # file:/ URIs ARE local — strip the scheme and proceed with the
-        # os/shutil rename: file:/x, file:///x, and file://localhost/x
-        # all mean /x. A NON-empty authority (file://nas01/exports)
-        # names a remote share, and folding it into a local path would
-        # silently write to the wrong location — keep rejecting it.
-        rest = base[len(scheme.group(0)) + 1 :]
-        if rest.startswith("//"):
-            authority, _, path = rest[2:].partition("/")
-            if authority not in ("", "localhost"):
-                raise ValueError(
-                    f"single_file=True needs an os-level path for its rename; "
-                    f"file: URI with remote authority {authority!r} in "
-                    f"base={base!r} is not local. Use the directory sink "
-                    "(single_file=False) for non-local URIs."
-                )
-            rest = "/" + path
-        out = os.path.join(rest, report_name, f"{from_date}_to_{to_date}.csv")
-        scheme = None
-    if scheme:
-        raise ValueError(
-            f"single_file=True needs an os-level path for its rename; got "
-            f"URI scheme {scheme.group(0)!r} in base={base!r}. Use the "
-            "directory sink (single_file=False), which writes through the "
-            "Hadoop filesystem layer, for non-local URIs."
-        )
+    out = os.path.join(
+        os_path(
+            base,
+            "single_file=True needs an os-level path for its rename",
+            "Use the directory sink (single_file=False), which writes through "
+            "the Hadoop filesystem layer, for non-local URIs.",
+        ),
+        report_name,
+        f"{from_date}_to_{to_date}.csv",
+    )
     import shutil
 
     staging = out + "._staging"

@@ -321,33 +321,42 @@ def test_config_plan_filters_and_join(spark, tmp_path):
     assert plan[0]["report_name"] == "a" and plan[0]["base_url"] == "https://x"
 
 
-def test_driver_frames_are_local_relations(spark, tmp_path, monkeypatch):
-    """The config frames and every monitoring append source are
-    ``LocalRelation`` plans: no ``LogicalRDD``, whose jobs each need a
-    Python worker."""
-    from talkdesk_async_etl_spark.pipeline import monitoring
-
-    frames = []
-
-    def recording(*a):
-        frames.append(local_frame(*a))
-        return frames[-1]
-
-    monkeypatch.setattr(monitoring, "local_frame", recording)
-    mon = MonitoringStore(spark, str(tmp_path / "mon"))
-    mon.log_job_start("run1", "2024-01-01", "2024-01-02", 1)
-    mon.log_reports("run1", "2024-01-01", "2024-01-02", [ReportResult("r", "SUCCESS", 3)])
-    mon.log_job_end("run1", "2024-01-01", "2024-01-02", 1, 1, 0)
-    assert len(frames) == 3
-    for df in (*config_dataframes(spark, make_cfg(tmp_path)), *frames):
+def test_driver_frames_are_local_relations(spark, tmp_path):
+    """The config frames are ``LocalRelation`` plans: no ``LogicalRDD``,
+    whose jobs each need a Python worker."""
+    for df in config_dataframes(spark, make_cfg(tmp_path)):
         plan = df._jdf.queryExecution().analyzed().toString()
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
 
 
-def test_local_frame_rejects_what_the_schema_forbids(spark):
+def test_monitoring_appends_start_no_spark_jobs(spark, tmp_path):
+    """The three appends of a run are parquet file writes on the driver:
+    under a job group they start no Spark job, while a ``collect()`` in
+    the same group is counted (the control that the group is seen)."""
+    sc = spark.sparkContext
+    group = f"appends-{os.getpid()}-{id(tmp_path)}"
+    mon = MonitoringStore(spark, str(tmp_path / "mon"))
+    sc.setJobGroup(group, "monitoring appends")
+    try:
+        mon.log_job_start("run1", "2024-01-01", "2024-01-02", 1)
+        mon.log_reports("run1", "2024-01-01", "2024-01-02", [ReportResult("r", "SUCCESS", 3)])
+        mon.log_job_end("run1", "2024-01-01", "2024-01-02", 1, 1, 0)
+        assert spark.range(1).collect()[0]["id"] == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # Job events reach the status store through the listener bus; wait
+    # until it has delivered every event posted so far.
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1  # the collect alone
+    assert mon.job_summary("run1") == {"total": 1, "ok": 1, "fail": 0}
+
+
+def test_local_frame_rejects_what_the_schema_forbids(spark, tmp_path):
     """A None in a non-null field, a wrong type, an int32 overflow and a
     row of the wrong width all raise; none is stored as NULL or
-    truncated."""
+    truncated. The monitoring append path rejects the same rows and
+    writes no file."""
     from talkdesk_async_etl_spark.schemas import REPORT_CONFIG_SCHEMA
 
     good = ("r", True, "standard", 3, 30, "dev")
@@ -359,11 +368,23 @@ def test_local_frame_rejects_what_the_schema_forbids(spark):
         ("r", True, 7, 3, 30, "dev"),  # int in a string field
         ("r", True, "standard", 3, 30),  # one field short
     ]
+    mon = MonitoringStore(spark, str(tmp_path / "mon"))
+    table = str(tmp_path / "mon" / "config_rows")
     for row in bad_rows:
         with pytest.raises((ValueError, TypeError)):
             local_frame(spark, [row], REPORT_CONFIG_SCHEMA)
+        with pytest.raises((ValueError, TypeError)):
+            mon._append([row], REPORT_CONFIG_SCHEMA, table)
     with pytest.raises(ValueError):
         local_frame(spark, [good, good[:5]], REPORT_CONFIG_SCHEMA)  # ragged rows
+    with pytest.raises(ValueError):
+        mon._append([good, good[:5]], REPORT_CONFIG_SCHEMA, table)
+    # The public append path: an int32 overflow in rows_written.
+    with pytest.raises((ValueError, TypeError)):
+        mon.log_reports("run1", "2024-01-01", "2024-01-02", [ReportResult("r", "SUCCESS", 2**31)])
+    with pytest.raises((ValueError, TypeError)):
+        mon.log_job_start(None, "2024-01-01", "2024-01-02", 1)  # None run_id
+    assert not os.path.exists(tmp_path / "mon")  # no file, not even a directory
 
 
 def test_monitoring_times_are_utc_instants_in_any_time_zone(spark, tmp_path, monkeypatch):
@@ -479,6 +500,170 @@ def test_monitoring_reports_idempotent_under_duplicate_appends(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0]["status"] == "SUCCESS" and rows[0]["rows_written"] == 42
     assert mon.job_summary("run9") == {"total": 1, "ok": 1, "fail": 0}
+
+
+def _table_files(path) -> list[str]:
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+
+def test_monitoring_append_is_atomic(spark, tmp_path, monkeypatch):
+    """A parquet write that fails midway leaves the store as it was:
+    readers see exactly the earlier rows while the partial file exists
+    and after the failure, and no partial or temp file stays in the
+    table directory."""
+    import pyarrow.parquet as pq
+
+    mon = MonitoringStore(spark, str(tmp_path / "mon"))
+    mon.log_job_start("run1", "2024-01-01", "2024-01-02", 2)
+    mon.log_reports("run1", "2024-01-01", "2024-01-02", [ReportResult("a", "SUCCESS", 5)])
+
+    def read_back():
+        return sorted(map(tuple, mon.jobs().collect())), sorted(map(tuple, mon.reports().collect()))
+
+    before = read_back()
+    files = {p: _table_files(p) for p in (mon.job_path, mon.report_path)}
+    seen_mid_write = []
+
+    def failing_write(table, where, **kw):
+        with open(where, "wb") as fh:
+            fh.write(b"PAR1 half a file")
+        seen_mid_write.append(read_back())
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pq, "write_table", failing_write)
+    with pytest.raises(OSError, match="disk full"):
+        mon.log_reports("run1", "2024-01-01", "2024-01-02", [ReportResult("b", "FAILED", 0)])
+    with pytest.raises(OSError, match="disk full"):
+        mon.log_job_end("run1", "2024-01-01", "2024-01-02", 2, 1, 1)
+    monkeypatch.undo()
+
+    assert seen_mid_write == [before, before]
+    assert {p: _table_files(p) for p in files} == files
+    assert read_back() == before
+    assert mon.job_summary("run1") == {"total": 1, "ok": 1, "fail": 0}
+
+
+def test_monitoring_concurrent_appends(spark, tmp_path):
+    """Eight threads append whole runs to one store at once, switching
+    often; every row reads back."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    mon = MonitoringStore(spark, str(tmp_path / "mon"))
+
+    def one_run(k: int) -> None:
+        run_id = f"run{k}"
+        results = [ReportResult(f"r{j}", "SUCCESS" if j % 3 else "FAILED", j) for j in range(k + 1)]
+        mon.log_job_start(run_id, "2024-01-01", "2024-01-02", len(results))
+        mon.log_reports(run_id, "2024-01-01", "2024-01-02", results)
+        ok = sum(r.status == "SUCCESS" for r in results)
+        mon.log_job_end(run_id, "2024-01-01", "2024-01-02", len(results), ok, len(results) - ok)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            for f in [pool.submit(one_run, k) for k in range(8)]:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+
+    assert len(_table_files(mon.job_path)) == 16 and len(_table_files(mon.report_path)) == 8
+    jobs = {r["run_id"]: r for r in mon.jobs().collect()}
+    assert sorted(jobs) == [f"run{k}" for k in range(8)]
+    for k in range(8):
+        fail = sum(1 for j in range(k + 1) if j % 3 == 0)
+        row = jobs[f"run{k}"]
+        assert (row["total_reports"], row["success_count"], row["failed_count"]) == (k + 1, k + 1 - fail, fail)
+        assert row["status"] == derive_job_status(k + 1, k + 1 - fail, fail)
+    reports = mon.reports().groupBy("run_id").count().collect()
+    assert sorted((r["run_id"], r["count"]) for r in reports) == [(f"run{k}", k + 1) for k in range(8)]
+
+
+def test_monitoring_mixed_spark_and_arrow_part_files(spark, tmp_path):
+    """Stores on disk hold part files that Spark wrote. Arrow appends on
+    top of them read back with the same schemas (timestamps stay
+    ``TimestampType``, not NTZ), and latest-wins picks the latest row
+    whichever writer wrote it."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from talkdesk_async_etl_spark.schemas import JOB_MONITORING_SCHEMA, REPORT_MONITORING_SCHEMA
+
+    t = [dt.datetime(2024, 1, 1, 10, m) for m in range(4)]
+    mon = MonitoringStore(spark, str(tmp_path / "mixed"))
+    spark_only = MonitoringStore(spark, str(tmp_path / "spark_only"))
+    for store in (mon, spark_only):
+        local_frame(
+            spark,
+            [("run1", "2024-01-01", "2024-01-02", t[0], None, "RUNNING", 2, None, None, None)],
+            JOB_MONITORING_SCHEMA,
+        ).write.mode("append").parquet(store.job_path)
+        local_frame(
+            spark,
+            [
+                ("run1", "a", "2024-01-01", "2024-01-02", t[0], t[1], "FAILED", 0, "attempt 1"),
+                ("run1", "b", "2024-01-01", "2024-01-02", t[0], t[3], "SUCCESS", 9, None),
+            ],
+            REPORT_MONITORING_SCHEMA,
+        ).write.mode("append").parquet(store.report_path)
+    assert "_SUCCESS" in _table_files(mon.job_path)  # a Spark-written table
+
+    mon.log_reports(
+        "run1", "2024-01-01", "2024-01-02",
+        [
+            ReportResult("a", "SUCCESS", 7, start_time=t[2], end_time=t[2]),  # retry wins
+            ReportResult("b", "FAILED", 0, error_message="older", start_time=t[0], end_time=t[2]),
+        ],
+    )
+    mon.log_job_end("run1", "2024-01-01", "2024-01-02", 2, 2, 0)
+    mon.log_job_start("run2", "2024-01-01", "2024-01-02", 0)
+    arrow_only = MonitoringStore(spark, str(tmp_path / "arrow_only"))
+    arrow_only.log_job_start("run3", "2024-01-01", "2024-01-02", 1)
+    arrow_only.log_reports("run3", "2024-01-01", "2024-01-02", [ReportResult("a", "SUCCESS", 1)])
+
+    for frame in ("jobs", "reports"):
+        schema = getattr(spark_only, frame)().schema
+        assert getattr(mon, frame)().schema == schema == getattr(arrow_only, frame)().schema
+        kinds = {f.name: type(f.dataType) for f in schema.fields}
+        assert kinds["start_time"] is kinds["end_time"] is T.TimestampType
+    reports = {r["report_name"]: r for r in mon.reports().filter("run_id = 'run1'").collect()}
+    assert (reports["a"]["status"], reports["a"]["rows_written"]) == ("SUCCESS", 7)
+    assert (reports["b"]["status"], reports["b"]["rows_written"]) == ("SUCCESS", 9)  # Spark row is later
+    jobs = {r["run_id"]: r for r in mon.jobs().collect()}
+    assert (jobs["run1"]["status"], jobs["run1"]["success_count"]) == ("SUCCESS", 2)
+    assert jobs["run2"]["status"] == "RUNNING"
+    assert mon.job_summary("run1") == {"total": 2, "ok": 2, "fail": 0}
+
+
+@pytest.mark.parametrize(
+    "base",
+    ["abfss://mon@acct.dfs.core.windows.net/monitoring", "s3a://bucket/monitoring", "dbfs:/mnt/mon",
+     "file://nas01/exports/mon"],
+)
+def test_monitoring_store_rejects_non_local_paths(spark, tmp_path, monkeypatch, base):
+    """The appends are local file writes, so a remote URI fails up
+    front, pointing at the remote-capable store, instead of creating a
+    local directory named after the scheme."""
+    from talkdesk_async_etl_spark.pipeline.monitoring import make_monitoring_store
+
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="make_monitoring_store.*MergeMonitoringStore"):
+        MonitoringStore(spark, base)
+    with pytest.raises(ValueError, match="local directory"):
+        make_monitoring_store(spark, base)  # no catalog db: the parquet store
+    assert os.listdir(tmp_path) == []
+
+
+def test_monitoring_store_accepts_local_file_uris(spark, tmp_path):
+    """``file:`` URIs without a remote host are local paths, as for the
+    single-file CSV sink."""
+    for base in (f"file://{tmp_path}/a", f"file:{tmp_path}/b", f"file://localhost{tmp_path}/c"):
+        mon = MonitoringStore(spark, base)
+        assert mon.base == f"{tmp_path}/{base[-1]}"
+        mon.log_job_start("run1", "2024-01-01", "2024-01-02", 0)
+        assert mon.jobs().first()["status"] == "RUNNING"
 
 
 def test_oauth_fetcher_retries_and_feeds_token_manager():
