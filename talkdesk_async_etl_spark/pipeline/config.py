@@ -4,22 +4,21 @@ The reference has two config systems — Delta tables on Databricks
 (ddl/ddl_talkdesk_config.py:10-34) and a free-form ``config.json``
 locally (config.example.json, loaded at local/async_utils.py:11-15).
 The engine uses ONE typed model loadable from either: a config
-DataFrame pair (report_config ⋈ endpoint_config — the reference's one
-join, DIST:53) or a JSON document, both landing in the same dataclasses.
+DataFrame pair or a JSON document, both landing in the same dataclasses.
+A run's plan (the reference's filter + ``report_config ⋈ endpoint_config``
+join, DIST:42-53) resolves on the driver in ``PipelineConfig.report_plan``,
+with no Spark job; ``build_report_plan`` is its relational twin.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from talkdesk_async_etl_spark.schemas import (
-    ENDPOINT_CONFIG_SCHEMA,
-    REPORT_CONFIG_SCHEMA,
-    local_frame,
-)
+from talkdesk_async_etl_spark.schemas import ENDPOINT_CONFIG_SCHEMA, REPORT_CONFIG_SCHEMA, local_frame
 
 
 @dataclass(frozen=True)
@@ -49,8 +48,17 @@ class PipelineConfig:
     reports: tuple[ReportConfig, ...] = field(default_factory=tuple)
     endpoints: tuple[EndpointConfig, ...] = field(default_factory=tuple)
 
-    def enabled_reports(self) -> tuple[ReportConfig, ...]:
-        return tuple(r for r in self.reports if r.enabled and r.env == self.env)
+    def report_plan(self) -> tuple[ReportConfig, ...]:
+        """The reports a run fetches, in ``reports`` order: enabled, in
+        ``env``, and with an endpoint of their ``endpoint_type`` in
+        ``env``. Two endpoints of one type in ``env`` raise
+        ``ValueError``; the join would run each of its reports twice."""
+        types = Counter(e.endpoint_type for e in self.endpoints if e.env == self.env)
+        if dup := sorted(t for t, n in types.items() if n > 1):
+            raise ValueError(f"more than one {self.env!r} endpoint of type {', '.join(dup)}")
+        return tuple(
+            r for r in self.reports if r.enabled and r.env == self.env and r.endpoint_type in types
+        )
 
 
 def from_json_doc(doc: dict, env: str = "dev") -> PipelineConfig:
@@ -76,18 +84,19 @@ def from_json_doc(doc: dict, env: str = "dev") -> PipelineConfig:
     )
 
 
-def config_dataframes(spark: SparkSession, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
-    """Config as DataFrames with the reference's exact schemas — the
-    relational form the planner works on. Both are local relations, so
-    collecting the plan runs no Python worker."""
-    report_df = local_frame(
+def report_frame(spark: SparkSession, reports: tuple[ReportConfig, ...]) -> DataFrame:
+    """``reports`` as a ``REPORT_CONFIG_SCHEMA`` local relation: its
+    jobs run no Python worker."""
+    return local_frame(
         spark,
-        [
-            (r.report_name, r.enabled, r.endpoint_type, r.retries, r.timeout_sec, r.env)
-            for r in cfg.reports
-        ],
+        [(r.report_name, r.enabled, r.endpoint_type, r.retries, r.timeout_sec, r.env) for r in reports],
         REPORT_CONFIG_SCHEMA,
     )
+
+
+def config_dataframes(spark: SparkSession, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
+    """Config as local-relation DataFrames with the reference's exact
+    schemas: the relational form ``build_report_plan`` works on."""
     endpoint_df = local_frame(
         spark,
         [
@@ -96,7 +105,7 @@ def config_dataframes(spark: SparkSession, cfg: PipelineConfig) -> tuple[DataFra
         ],
         ENDPOINT_CONFIG_SCHEMA,
     )
-    return report_df, endpoint_df
+    return report_frame(spark, cfg.reports), endpoint_df
 
 
 def from_config_tables(
@@ -136,7 +145,8 @@ def from_config_tables(
 def build_report_plan(report_df: DataFrame, endpoint_df: DataFrame, env: str) -> DataFrame:
     """The reference's logical plan (DIST:42-53): filtered config scans
     + equi join on endpoint_type. The endpoint side is dimension-sized
-    → broadcast hint; Catalyst pushes both filters into the scans."""
+    → broadcast hint; Catalyst pushes both filters into the scans.
+    ``PipelineConfig.report_plan`` gives the same reports without Spark."""
     reports = report_df.filter((F.col("enabled") == True) & (F.col("env") == env))  # noqa: E712
     endpoints = endpoint_df.filter(F.col("env") == env).drop("env")
     return reports.join(F.broadcast(endpoints), "endpoint_type")

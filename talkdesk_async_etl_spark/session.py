@@ -83,14 +83,6 @@ def build_session(
     return spark
 
 
-def get_or_create(spark: SparkSession | None = None) -> SparkSession:
-    """Reuse an active session (driver-provided) or build the default."""
-    if spark is not None:
-        return spark
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()
-
-
 # Ownership state for single_partition_loop's session-global conf pin:
 # one thread may hold (and nest) the window; any other thread trying to
 # open one while it is held is a contract violation and fails loudly.

@@ -13,25 +13,31 @@ Everything network-touching sits behind the ``ReportSource`` protocol:
   report id, GET returns the bytes of ``{fixture_dir}/{report_name}.csv``.
   Failure injection via a set of report names that raise a given status.
 
-Both honor the per-report RetryPolicy and the TokenManager — identical
-retry/backoff semantics to the reference (E4/E5).
+Both honor the per-report RetryPolicy and ``timeout_sec`` and the
+TokenManager — identical retry/backoff semantics to the reference (E4/E5).
 """
 
 from __future__ import annotations
 
 import asyncio
+import json
+import urllib.error
+import urllib.request
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Protocol
+from urllib.parse import quote
 
 from talkdesk_async_etl_spark.pipeline.retry import HttpStatusError, RetryPolicy
 from talkdesk_async_etl_spark.pipeline.token import TokenManager
 
 
 class ReportSource(Protocol):
-    async def generate_report_id(self, report_name: str, from_date: str, to_date: str) -> str: ...
+    async def generate_report_id(
+        self, report_name: str, from_date: str, to_date: str, timeout_sec: float
+    ) -> str: ...
 
-    async def download_report(self, report_id: str) -> bytes:
+    async def download_report(self, report_id: str, timeout_sec: float) -> bytes:
         """Returns the report payload: CSV bytes, exactly as served."""
         ...
 
@@ -50,11 +56,13 @@ class LocalFileReportSource:
     calls: list[tuple[str, str]] = field(default_factory=list)
     _fail_counts: dict[str, int] = field(default_factory=dict)
 
-    async def generate_report_id(self, report_name: str, from_date: str, to_date: str) -> str:
+    async def generate_report_id(
+        self, report_name: str, from_date: str, to_date: str, timeout_sec: float
+    ) -> str:
         self.calls.append(("post", report_name))
         return f"{report_name}:{from_date}:{to_date}"
 
-    async def download_report(self, report_id: str) -> bytes:
+    async def download_report(self, report_id: str, timeout_sec: float) -> bytes:
         report_name = report_id.split(":", 1)[0]
         self.calls.append(("get", report_name))
         if report_name in self.fail_reports:
@@ -80,19 +88,15 @@ class HttpReportSource:
         post_endpoint: str,
         get_endpoint: str,
         token_manager: TokenManager,
-        timeout_sec: float = 30.0,
     ):
         self._base = base_url
         self._post = post_endpoint
         self._get = get_endpoint
         self._tokens = token_manager
-        self._timeout = timeout_sec
 
-    def _urllib_request(self, url: str, payload: dict | None, token: str) -> tuple[int, bytes]:
-        import json
-        import urllib.error
-        import urllib.request
-
+    def _urllib_request(
+        self, url: str, payload: dict | None, token: str, timeout_sec: float
+    ) -> tuple[int, bytes]:
         data = None
         headers = {"Authorization": f"Bearer {token}"}
         if payload is not None:
@@ -100,33 +104,32 @@ class HttpReportSource:
             headers["Content-Type"] = "application/json"
         req = urllib.request.Request(url, data=data, headers=headers)
         try:
-            with urllib.request.urlopen(req, timeout=self._timeout) as resp:  # noqa: S310
+            with urllib.request.urlopen(req, timeout=timeout_sec) as resp:  # noqa: S310
                 return resp.status, resp.read()
         except urllib.error.HTTPError as exc:
             return exc.code, exc.read()
 
     # -- ReportSource protocol -----------------------------------------
 
-    async def generate_report_id(self, report_name: str, from_date: str, to_date: str) -> str:
-        import json
-
+    async def generate_report_id(
+        self, report_name: str, from_date: str, to_date: str, timeout_sec: float
+    ) -> str:
         token = await self._tokens.get_token()
         status, body = await asyncio.to_thread(
             self._urllib_request,
             f"{self._base}{self._post}",
             {"report": report_name, "from_date": from_date, "to_date": to_date},
-            token,
+            token, timeout_sec,
         )
         if status >= 400:
             raise HttpStatusError(status, _error_text(body))
         return str(json.loads(body.decode("utf-8", errors="replace"))["report_id"])
 
-    async def download_report(self, report_id: str) -> bytes:
-        from urllib.parse import quote
-
+    async def download_report(self, report_id: str, timeout_sec: float) -> bytes:
         token = await self._tokens.get_token()
         status, body = await asyncio.to_thread(
-            self._urllib_request, f"{self._base}{self._get}?id={quote(report_id)}", None, token
+            self._urllib_request,
+            f"{self._base}{self._get}?id={quote(report_id)}", None, token, timeout_sec,
         )
         if status >= 400:
             raise HttpStatusError(status, _error_text(body))
@@ -144,16 +147,18 @@ async def fetch_report_csv(
     from_date: str,
     to_date: str,
     policy: RetryPolicy,
+    timeout_sec: float,
     sleep=asyncio.sleep,
 ) -> bytes:
     """POST→GET with the reference's retry semantics applied to each
-    call independently (DB:330-382); returns the CSV payload bytes."""
+    call independently (DB:330-382), each attempt bounded by the
+    report's ``timeout_sec``; returns the CSV payload bytes."""
 
     async def _post():
-        return await source.generate_report_id(report_name, from_date, to_date)
+        return await source.generate_report_id(report_name, from_date, to_date, timeout_sec)
 
     async def _get():
-        return await source.download_report(report_id)
+        return await source.download_report(report_id, timeout_sec)
 
     report_id = await policy.run(_post, sleep=sleep)
     return await policy.run(_get, sleep=sleep)

@@ -63,12 +63,6 @@ def read_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dic
     return {n: read_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> None:
-    """Expose tables to the SQL API under their bare names."""
-    for n in names:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_json_doc(path: str) -> dict:
     """S2: driver-side JSON config document load (reference
     local/async_utils.py:11-15). Small orchestration metadata — a plain

@@ -3,7 +3,7 @@
 The reference sets five ADLS Gen2 OAuth configs inline
 (databricks/talkdesk_databricks_etl.py:134-164). Here the same pattern
 is isolated behind one function so storage auth never leaks into
-pipeline code, and a no-op local adapter keeps tests hermetic.
+pipeline code; local paths need no configuration.
 """
 
 from __future__ import annotations
@@ -34,7 +34,3 @@ def configure_adls_oauth(
     }
     for k, v in conf.items():
         spark.conf.set(k, v)
-
-
-def configure_local(spark: SparkSession) -> None:
-    """Local/test profile: nothing to configure."""

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -130,6 +131,55 @@ def test_http_pipeline_end_to_end(spark, tmp_path, api_server):
     p = os.path.join(cfg.output_base_path, "agent_activity", "2024-01-01_to_2024-01-02.csv")
     assert os.path.isfile(p)
     assert open(p, encoding="utf-8").read().startswith("key,value")
+
+
+class _SlowApi(_Api):
+    """The report API answering each download after 1.5 s, counting
+    downloads per report."""
+
+    def do_GET(self):  # noqa: N802
+        name = parse_qs(urlparse(self.path).query)["id"][0].removeprefix("rid-")
+        downloads = self.state.setdefault("downloads", {})
+        downloads[name] = downloads.get(name, 0) + 1
+        time.sleep(1.5)
+        try:
+            super().do_GET()
+        except (BrokenPipeError, ConnectionResetError):
+            pass  # the client gave up on its timeout
+
+
+def test_per_report_timeout_bounds_each_call(spark, tmp_path):
+    """Each report's ``timeout_sec`` bounds its own calls: against a
+    1.5 s download, a 1 s report times out on both of its attempts and
+    fails, while a 5 s report succeeds in the same run."""
+    _SlowApi.state = {}
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _SlowApi)
+    thread = threading.Thread(target=srv.serve_forever, daemon=True)
+    thread.start()
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        ep = EndpointConfig("standard", base, "/oauth/token", "/reports/generate", "/reports/download")
+        cfg = PipelineConfig(
+            env="dev",
+            output_base_path=str(tmp_path / "out"),
+            reports=(
+                ReportConfig("short_timeout", retries=2, timeout_sec=1),
+                ReportConfig("long_timeout", retries=2, timeout_sec=5),
+            ),
+            endpoints=(ep,),
+        )
+        tokens = TokenManager(build_token_fetcher(f"{base}{ep.auth_endpoint}", "cid", "sec"))
+        source = HttpReportSource(base, ep.post_endpoint, ep.get_endpoint, tokens)
+        mon = MonitoringStore(spark, str(tmp_path / "mon"))
+        out = run_pipeline(spark, cfg, source, mon, "2024-01-01", "2024-01-02")
+    finally:
+        srv.shutdown()
+        thread.join(timeout=5)
+    results = {r.report_name: r for r in out.results}
+    assert results["short_timeout"].status == "FAILED"
+    assert "timed out" in results["short_timeout"].error_message
+    assert results["long_timeout"].status == "SUCCESS" and results["long_timeout"].rows_written == 2
+    assert _SlowApi.state["downloads"] == {"short_timeout": 2, "long_timeout": 1}
 
 
 def test_write_csv_report_single_file_contract(spark, tmp_path):

@@ -25,6 +25,7 @@ from talkdesk_async_etl_spark.pipeline.config import (
     build_report_plan,
     config_dataframes,
     from_json_doc,
+    report_frame,
 )
 from talkdesk_async_etl_spark.pipeline.monitoring import MonitoringStore, ReportResult, derive_job_status
 from talkdesk_async_etl_spark.pipeline.retry import HttpStatusError, RetryPolicy, is_retriable
@@ -140,7 +141,9 @@ def test_retry_then_succeed_schedule(fixture_dir):
     source = LocalFileReportSource(fixture_dir, fail_reports={"call_volume": 503}, fail_times=2)
     policy = RetryPolicy(max_attempts=3, backoff_base_sec=1.0)
     text = asyncio.run(
-        fetch_report_csv(source, "call_volume", "2024-01-01", "2024-01-02", policy, sleep=fake_sleep)
+        fetch_report_csv(
+            source, "call_volume", "2024-01-01", "2024-01-02", policy, 30, sleep=fake_sleep
+        )
     )
     assert text.startswith(b"key,value")
     assert delays == [1.0, 2.0]  # attempts 1 and 2 failed → backoff 1s, 2s
@@ -163,6 +166,11 @@ _PAYLOADS = [
     ("invalid_utf8", b"key,value\na,\xff\xfe\nb,\xc3\n\xe2\x82,3\n"),
     ("nbsp_then_data", "\xa0\nkey,value\na,1\n".encode()),
     ("too_many_fields", b"key,value\na,1\nb,2,3\n"),
+    # NA tokens and empty cells: counted as rows with or without NA detection.
+    ("na_tokens", b"key,value\nNA,1\nnull,nan\nNaN,NULL\n"),
+    ("empty_cells", b"key,value\na,\n,\n,2\n"),
+    ("comma_only_rows", b"a,b,c\n,,\n,,\n1,,\n"),
+    ("one_column_na", b"v\nNA\n\nnan\n#N/A\n"),
 ]
 
 
@@ -188,7 +196,7 @@ def test_payload_bytes_match_the_text_rule(tmp_path, body):
     fx.mkdir()
     (fx / "r.csv").write_bytes(body)
     out = asyncio.run(
-        _process_one(LocalFileReportSource(str(fx)), "r", 1, "2024-01-01", "2024-01-02",
+        _process_one(LocalFileReportSource(str(fx)), "r", 1, 30, "2024-01-01", "2024-01-02",
                      str(tmp_path / "out"))
     )
     assert (out.status, out.rows_written) == expected, out.error_message
@@ -208,7 +216,7 @@ def test_retry_final_4xx_no_retry(fixture_dir):
         asyncio.run(
             fetch_report_csv(
                 source, "call_volume", "2024-01-01", "2024-01-02",
-                RetryPolicy(max_attempts=3), sleep=fake_sleep,
+                RetryPolicy(max_attempts=3), 30, sleep=fake_sleep,
             )
         )
     assert delays == []  # 4xx is final — zero backoffs
@@ -322,11 +330,94 @@ def test_config_plan_filters_and_join(spark, tmp_path):
 
 
 def test_driver_frames_are_local_relations(spark, tmp_path):
-    """The config frames are ``LocalRelation`` plans: no ``LogicalRDD``,
-    whose jobs each need a Python worker."""
-    for df in config_dataframes(spark, make_cfg(tmp_path)):
-        plan = df._jdf.queryExecution().analyzed().toString()
-        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    """The distributed profile's ``mapInPandas`` input is a
+    ``LocalRelation`` plan: no ``LogicalRDD``, whose jobs each need a
+    Python worker."""
+    df = report_frame(spark, make_cfg(tmp_path).report_plan())
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def _endpoint(endpoint_type="standard", env="dev", base_url="https://x"):
+    return EndpointConfig(endpoint_type, base_url, "/a", "/p", "/g", env=env)
+
+
+@pytest.mark.parametrize(
+    "reports, endpoints",
+    [
+        pytest.param(
+            (ReportConfig("a"), ReportConfig("b", enabled=False)),
+            (_endpoint(),),
+            id="disabled",
+        ),
+        pytest.param(
+            (ReportConfig("a"), ReportConfig("c", env="prod")),
+            (_endpoint(), _endpoint(env="prod")),
+            id="other_env",
+        ),
+        pytest.param(
+            (ReportConfig("a"), ReportConfig("v", endpoint_type="vip")),
+            (_endpoint(),),
+            id="type_without_endpoint",
+        ),
+        pytest.param(
+            (ReportConfig("a"), ReportConfig("v", endpoint_type="vip")),
+            (_endpoint(), _endpoint("vip", env="prod")),
+            id="endpoint_only_in_other_env",
+        ),
+        pytest.param(
+            (ReportConfig("v", endpoint_type="vip"), ReportConfig("a"), ReportConfig("b"),
+             ReportConfig("w", endpoint_type="vip", enabled=False)),
+            (_endpoint(), _endpoint("vip", base_url="https://v")),
+            id="two_types",
+        ),
+    ],
+)
+def test_report_plan_matches_the_join(spark, tmp_path, reports, endpoints):
+    """``PipelineConfig.report_plan`` names the same reports, as a
+    multiset, as the relational plan over local frames of the config."""
+    from collections import Counter
+
+    cfg = PipelineConfig("dev", str(tmp_path), reports=reports, endpoints=endpoints)
+    joined = build_report_plan(*config_dataframes(spark, cfg), cfg.env).collect()
+    planned = cfg.report_plan()
+    assert Counter(r.report_name for r in planned) == Counter(r["report_name"] for r in joined)
+    assert planned == tuple(r for r in reports if r in planned)  # config order
+
+
+def test_report_plan_rejects_duplicate_endpoint_type(spark, tmp_path, fixture_dir):
+    """Two ``dev`` endpoints of one type would run each of its reports
+    twice into one output path; the run raises before it logs a job."""
+    cfg = PipelineConfig(
+        "dev", str(tmp_path / "out"), reports=(ReportConfig("agent_activity"),),
+        endpoints=(_endpoint(), _endpoint(base_url="https://y"), _endpoint(env="prod")),
+    )
+    mon = MonitoringStore(spark, str(tmp_path / "mon"))
+    with pytest.raises(ValueError, match="standard"):
+        run_pipeline(spark, cfg, LocalFileReportSource(fixture_dir), mon, "2024-01-01", "2024-01-02")
+    assert not os.path.exists(mon.job_path)
+
+
+def test_driver_async_run_starts_no_spark_jobs(spark, tmp_path, fixture_dir):
+    """A driver-async run resolves its plan in Python and appends its
+    monitoring rows as files: under a job group it starts no Spark job,
+    while a ``collect()`` in the same group is counted (the control)."""
+    sc = spark.sparkContext
+    group = f"driver-async-{os.getpid()}-{id(tmp_path)}"
+    mon = MonitoringStore(spark, str(tmp_path / "mon"))
+    sc.setJobGroup(group, "driver-async run")
+    try:
+        out = run_pipeline(
+            spark, make_cfg(tmp_path), LocalFileReportSource(fixture_dir), mon,
+            "2024-01-01", "2024-01-02",
+        )
+        assert spark.range(1).collect()[0]["id"] == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1  # the collect alone
+    assert out.status == "SUCCESS" and out.ok == len(REPORTS)
 
 
 def test_monitoring_appends_start_no_spark_jobs(spark, tmp_path):
@@ -766,13 +857,13 @@ def test_ddl_bootstrap_and_pipeline_from_seeded_tables(spark, tmp_path):
     assert plan.count() == 8
 
     cfg = from_config_tables(report_df, endpoint_df, "dev", str(tmp_path / "out"))
-    assert len(cfg.enabled_reports()) == 8
+    assert len(cfg.report_plan()) == 8
     assert cfg.endpoints[0].base_url.startswith("https://")
 
     # Fixtures for every seeded report, then a full run off the catalog.
     fx = tmp_path / "fx"
     fx.mkdir()
-    for r in cfg.enabled_reports():
+    for r in cfg.report_plan():
         (fx / f"{r.report_name}.csv").write_text("key,value\na,1\nb,2\n", encoding="utf-8")
     mon = MonitoringStore(spark, str(tmp_path / "mon_ddl"))
     out = run_pipeline(
