@@ -431,13 +431,12 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materializing wrapper around :func:`curation_audit_plan` (the
     lazy core the plan test pins — the keyed_table_diff precedent):
     the audit is 6 rows by construction, so collect_release frees
-    every stage cache on the way out. Same size-derived conf window
-    as pipeline_incremental_e2e: every post-scan stage relation is
+    every stage cache on the way out. Same conf window as
+    pipeline_incremental_e2e: every post-scan stage relation is
     survivor-/language-/pair-sized, so when the corpus fits one
-    partition the per-stage AQE re-planning is pure overhead (no-op
-    at cluster scale)."""
+    partition the per-stage AQE re-planning is pure overhead."""
     n_docs = t(spark, sf_dir, "documents").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_docs // 100_000 + 1)):
+    with single_partition_loop(spark, n_docs):
         return collect_release(curation_audit_plan(spark, sf_dir))
 
 
@@ -550,11 +549,10 @@ def pipeline_entity_resolution_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     p = t(spark, sf_dir, "part", spread=True)
-    # Size-derived conf window (pipeline_incremental_e2e's rule; no-op
-    # at cluster scale): every stage past the scan is vocabulary- or
-    # block-pair-sized, so derive from the part table's metadata count.
+    # Every stage past the scan is vocabulary- or block-pair-sized, so
+    # the window is bounded by the part table's metadata count.
     n_recs = t(spark, sf_dir, "part").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_recs // 100_000 + 1)), cache_scope():
+    with single_partition_loop(spark, n_recs), cache_scope():
         norm = scoped_persist(
             p.select(
                 "p_partkey",
@@ -1053,16 +1051,15 @@ def pipeline_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every post-landing relation is file-count-, source-count- or
     pair-graph-sized); when the corpus itself fits one partition the
     per-stage AQE re-planning across all of them is pure overhead, so
-    the same size-derived conf window applies — derived from the
-    parquet metadata row count, no-op at cluster scale
-    (session.single_partition_loop). The window covers construction
+    the conf window applies, bounded by the parquet metadata row
+    count. The window covers construction
     too — construction executes the landing write, the shingle-pair
     build and the label loops eagerly, and an opening-after-
     construction variant measured WORSE (7.26 vs 5.79 s min-of-4:
     the pair build's lost parallelism at one partition costs less
     than the construction stages' AQE re-planning)."""
     n_docs = t(spark, sf_dir, "documents").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_docs // 100_000 + 1)):
+    with single_partition_loop(spark, n_docs):
         with cache_scope():
             return collect_release(incremental_audit_plan(spark, sf_dir))
 
@@ -1479,9 +1476,8 @@ def pipeline_training_export_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materializing wrapper around :func:`training_export_audit_plan`
     (the lazy core the plan test pins): the audit is 6 rows by
     construction, so collect_release frees every stage cache on the
-    way out. Same size-derived conf window as
-    pipeline_incremental_e2e (no-op at cluster scale)."""
+    way out. Same conf window as pipeline_incremental_e2e."""
     n_docs = t(spark, sf_dir, "documents").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_docs // 100_000 + 1)):
+    with single_partition_loop(spark, n_docs):
         with cache_scope():
             return collect_release(training_export_audit_plan(spark, sf_dir))

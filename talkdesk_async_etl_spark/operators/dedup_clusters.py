@@ -31,7 +31,7 @@ from talkdesk_async_etl_spark.plans.cache import (
     scoped_persist,
 )
 from talkdesk_async_etl_spark.plans.registry import query
-from talkdesk_async_etl_spark.session import single_partition_loop
+from talkdesk_async_etl_spark.session import partitions_for, single_partition_loop
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 _COMPONENTS_ORACLE = f"""
@@ -70,11 +70,9 @@ def propagate_min_labels(pairs: DataFrame) -> DataFrame:
     # not the session default (32 shuffle partitions over a few
     # hundred label rows makes every round
     # scheduling-overhead-dominated).
-    n_parts = max(1, pairs.count() // 100_000 + 1)
-    # Same size-derived rule, applied to the round exchanges: when the
-    # graph fits one partition, AQE re-planning per round is pure
-    # overhead (session.single_partition_loop; no-op when n_parts > 1).
-    with single_partition_loop(pairs.sparkSession, n_parts):
+    n_pairs = pairs.count()
+    n_parts = partitions_for(n_pairs)
+    with single_partition_loop(pairs.sparkSession, n_pairs):
         edges = scoped_persist(
             pairs.union(pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
             .repartition(n_parts, "doc_b")
@@ -497,12 +495,9 @@ def components_large_small_star(pairs: DataFrame) -> DataFrame:
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
     nodes = scoped_persist(sym.select(F.col("u").alias("doc_id")).distinct())
-    n_parts = max(1, nodes.count() // 100_000 + 1)
-    # Size-derived round-exchange rule (see session.single_partition_loop):
-    # a single-partition contraction round has nothing for AQE to
-    # coalesce/skew-split; no-op when the graph spans real partitions.
-    with single_partition_loop(pairs.sparkSession, n_parts):
-        return _star_rounds(pairs, sym, nodes, n_parts)
+    n_nodes = nodes.count()
+    with single_partition_loop(pairs.sparkSession, n_nodes):
+        return _star_rounds(pairs, sym, nodes, partitions_for(n_nodes))
 
 
 def _star_rounds(pairs: DataFrame, sym: DataFrame, nodes: DataFrame, n_parts: int) -> DataFrame:

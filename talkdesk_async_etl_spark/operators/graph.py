@@ -42,7 +42,7 @@ from talkdesk_async_etl_spark.plans.cache import (
     scoped_persist,
 )
 from talkdesk_async_etl_spark.plans.registry import query
-from talkdesk_async_etl_spark.session import single_partition_loop
+from talkdesk_async_etl_spark.session import partitions_for, single_partition_loop
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 _PR_DAMPING = 0.85
@@ -73,8 +73,8 @@ def _edge_window(und):
     exchange, no AQE re-plan. The count doubles as the persist
     materializer the callers rely on."""
     n_edges = und.count()
-    if 2 * n_edges >= 100_000:
-        return single_partition_loop(und.sparkSession, 2)  # no-op window
+    if partitions_for(2 * n_edges) > 1:
+        return single_partition_loop(und.sparkSession, 2 * n_edges)  # no-op
     from collections import Counter
 
     deg: Counter = Counter()
@@ -82,9 +82,7 @@ def _edge_window(und):
         deg[row[0]] += 1
         deg[row[1]] += 1
     wedge_bound = sum(d * d for d in deg.values())
-    return single_partition_loop(
-        und.sparkSession, max(1, wedge_bound // 100_000 + 1)
-    )
+    return single_partition_loop(und.sparkSession, wedge_bound)
 
 _PR_ITERS = 8
 _PR_CHECKPOINT_EVERY = 2  # measured best of {1, 2, 4} at sf0.1
@@ -149,11 +147,33 @@ def _oracle_pagerank() -> str:
 _PR_BROADCAST_NODES = 100_000
 
 
+def _graph_nodes(edges: DataFrame, n_parts: int):
+    """``(nodes, n_nodes, j)`` for the rounds over a persisted
+    ``(src, dst, …)`` edge list on ``n_parts`` partitions: the persisted
+    distinct ``node`` relation, its count, and the round-join rule ``j``
+    — broadcast a node-sized relation up to ``_PR_BROADCAST_NODES``
+    nodes, else shuffle it onto the node key. The count materializes
+    BOTH persists (nodes scan edges) before the caller's conf window,
+    so edge-sized work runs under the session's normal AQE profile and
+    only the node-sized rounds run inside the window."""
+    nodes = scoped_persist(
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
+        .distinct()
+        .repartition(n_parts, "node")
+    )
+    n_nodes = nodes.count()
+
+    def j(df: DataFrame) -> DataFrame:
+        if n_nodes <= _PR_BROADCAST_NODES:
+            return F.broadcast(df)
+        return df.repartition(n_parts, df.columns[0])
+
+    return nodes, n_nodes, j
+
+
 def pagerank_from_edges(
-    edges_raw: DataFrame,
-    iters: int = _PR_ITERS,
-    damping: float = _PR_DAMPING,
-    broadcast_nodes: int = _PR_BROADCAST_NODES,
+    edges_raw: DataFrame, iters: int = _PR_ITERS, damping: float = _PR_DAMPING
 ) -> DataFrame:
     """Weighted PageRank core over an ``(src, dst, w)`` edge list →
     ``(node, pr)``. Callers must hold an active cache_scope. The
@@ -165,35 +185,22 @@ def pagerank_from_edges(
     hundred edges make every round scheduling-dominated (the naive
     form measured 12.6 s at sf0.1; graph-sized partitioning + the
     broadcast fast path runs the same 8 iterations in ~2 s)."""
+    # The count sizes the graph AND materializes the persist that the
+    # normalization and node build below read, so the caller's edge
+    # build runs once.
+    edges_raw = scoped_persist(edges_raw)
+    n_edges = edges_raw.count()
+    n_parts = partitions_for(n_edges)
     # Normalize once: each edge carries its transition probability,
     # so the iteration never re-joins out-weights.
     outw = edges_raw.groupBy("src").agg(F.sum("w").alias("ow"))
-    n_edges = edges_raw.count()
-    n_parts = max(1, n_edges // 100_000 + 1)
     edges = scoped_persist(
         edges_raw.join(outw, "src")
         .select("src", "dst", (F.col("w") / F.col("ow")).alias("p"))
         .repartition(n_parts, "src")
     )
-    nodes = scoped_persist(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
-    )
-    # nodes.count() materializes BOTH scoped persists (nodes scans
-    # edges) before the conf window below: the corpus-sized edge build
-    # runs under the session's normal AQE profile — only the node-sized
-    # rounds belong inside the window.
-    n_nodes = nodes.count()
-    small = n_nodes <= broadcast_nodes
-
-    def j(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df.repartition(n_parts, df.columns[0])
-
-    # Size-derived round-exchange rule (session.single_partition_loop):
-    # no-op when the edge graph spans real partitions.
-    with single_partition_loop(edges_raw.sparkSession, n_parts):
+    nodes, n_nodes, j = _graph_nodes(edges, n_parts)
+    with single_partition_loop(edges_raw.sparkSession, n_edges):
         ranks = nodes.select(
             "node", F.lit(1.0 / n_nodes).alias("pr")
         ).localCheckpoint()
@@ -465,7 +472,10 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     relations serve every round before release."""
     n = t(spark, sf_dir, "nation")
     with cache_scope():
-        und = _trade_und(spark, sf_dir)
+        # The count materializes the persisted edge list the directed
+        # edges are read from, so the trade join runs once.
+        und = scoped_persist(_trade_und(spark, sf_dir))
+        n_edges = 2 * und.count()
         # Graph-sized partitioning, same reasoning as pagerank_from_edges
         # and propagate_min_labels: the iteration works on the EDGE
         # graph, orders of magnitude smaller than the corpus that built
@@ -475,8 +485,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges_wide = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
             und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
-        n_parts = max(1, edges_wide.count() // 100_000 + 1)
-        edges = scoped_persist(edges_wide.repartition(n_parts, "src"))
+        edges = scoped_persist(edges_wide.repartition(partitions_for(n_edges), "src"))
         # Bounded driver fetch: the single source id.
         src0 = edges.agg(F.min("src").alias("m")).collect()[0]["m"]
         dist = scoped_persist(
@@ -485,8 +494,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         frontier = dist
-        # Size-derived round-exchange rule (session.single_partition_loop).
-        with single_partition_loop(spark, n_parts):
+        with single_partition_loop(spark, n_edges):
             for rnd in range(1, _BFS_MAX_ROUNDS + 1):
                 # The frontier is node-sized — broadcast it onto the
                 # persisted edges (below ~10^5 nodes; at web scale drop
@@ -591,11 +599,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     n_edges = edges.count()
-    # Size-derived round-exchange rule (session.single_partition_loop);
-    # the lazy checkpoint + count fuse each peel round into ONE job
+    # The lazy checkpoint + count fuse each peel round into ONE job
     # (the propagate_min_labels pattern: count materializes the
     # checkpointed round AND probes convergence).
-    with single_partition_loop(spark, max(1, n_edges // 100_000 + 1)):
+    with single_partition_loop(spark, n_edges):
         for _ in range(_KCORE_MAX_ROUNDS):
             deg = (
                 edges.select(F.col("a").alias("node"))
@@ -702,23 +709,19 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = spark.createDataFrame(
         [(_SSSP_SRC, 0)], "node bigint, dist bigint"
     ).localCheckpoint()
-    # Size-derived round-exchange rule (session.single_partition_loop):
-    # the tiny signal is the materialized edge relation's own partition
-    # count (node²-bounded; no extra job).
-    with single_partition_loop(spark, edges.rdd.getNumPartitions()):
-        for k in range(1, _SSSP_ROUNDS + 1):
-            relaxed = (
-                dist.join(edges, dist.node == edges.src)
-                .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-            )
-            dist = (
-                dist.unionByName(relaxed)
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-            if k % 2 == 0 and k < _SSSP_ROUNDS:
-                dist = dist.localCheckpoint()
-        dist = dist.localCheckpoint()
+    for k in range(1, _SSSP_ROUNDS + 1):
+        relaxed = (
+            dist.join(edges, dist.node == edges.src)
+            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
+        )
+        dist = (
+            dist.unionByName(relaxed)
+            .groupBy("node")
+            .agg(F.min("dist").alias("dist"))
+        )
+        if k % 2 == 0 and k < _SSSP_ROUNDS:
+            dist = dist.localCheckpoint()
+    dist = dist.localCheckpoint()
     return dist.join(F.broadcast(n), dist.node == n.n_nationkey).select(
         F.col("n_name").alias("nation"), "dist"
     )
@@ -1185,24 +1188,14 @@ def hits_from_edges(edges_raw: DataFrame, iters: int = _HITS_ITERS) -> DataFrame
     plans as sort-merge even for a 25-node graph (measured ~+0.8 s
     over the 4 rounds at sf0.1). Lineage cut per round via
     localCheckpoint (the pagerank 2.4x lesson)."""
+    # The count sizes the graph AND materializes the persist the
+    # partitioned edge relation is read from, so the caller's edge
+    # build runs once.
+    edges_raw = scoped_persist(edges_raw)
     n_edges = edges_raw.count()
-    n_parts = max(1, n_edges // 100_000 + 1)
+    n_parts = partitions_for(n_edges)
     edges = scoped_persist(edges_raw.repartition(n_parts, "src"))
-    nodes = scoped_persist(
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .repartition(n_parts, "node")
-    )
-    # Materialize both scoped persists BEFORE the conf window below
-    # (nodes scans edges): the corpus-sized edge build runs under the
-    # session's normal AQE profile — only the node-sized rounds belong
-    # inside the window.
-    n_nodes = nodes.count()
-    small = n_nodes <= _PR_BROADCAST_NODES
-
-    def j(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df.repartition(n_parts, df.columns[0])
+    nodes, _, j = _graph_nodes(edges, n_parts)
 
     def norm(raw: DataFrame, key: str, out: str, checkpoint: bool) -> DataFrame:
         tot = raw.agg(F.sum("raw").alias("tot"))
@@ -1220,13 +1213,12 @@ def hits_from_edges(edges_raw: DataFrame, iters: int = _HITS_ITERS) -> DataFrame
         )
         return res.localCheckpoint() if checkpoint else res
 
-    # Size-derived round-exchange rule (session.single_partition_loop) +
-    # the pagerank checkpoint cadence: lineage is cut once per FULL
+    # The pagerank checkpoint cadence: lineage is cut once per FULL
     # hub/auth round (the half-round auth relation stays lazy inside
     # its round — its one-join subtree re-derives from the checkpointed
     # hub, which is cheaper than an extra eager materialization per
     # half-round; identical outputs, numbers in OPTIMIZATION_r15.md).
-    with single_partition_loop(edges_raw.sparkSession, n_parts):
+    with single_partition_loop(edges_raw.sparkSession, n_edges):
         h = nodes.select(
             "node", F.lit(_HITS_MICRO).cast("long").alias("hub")
         ).localCheckpoint()

@@ -450,18 +450,11 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         max(1, n_vecs // 10_000),
         emb.sparkSession.sparkContext.defaultParallelism,
     )
-    # Size-derived round-exchange rule (session.single_partition_loop):
-    # when the quantized corpus fits one cache partition, the k
-    # scan+argmax rounds have nothing for AQE to re-plan; no-op at
-    # scale. The window signal is the PURE size rule — BEFORE the
-    # defaultParallelism cap above, which is a compute-density
-    # scheduling choice: letting the core count leak into the signal
-    # would pin AQE off for an arbitrarily large corpus whenever
-    # defaultParallelism == 1 (ADVICE r15, the primitive's own
-    # never-a-core-count-rule contract).
-    with single_partition_loop(
-        emb.sparkSession, max(1, n_vecs // 10_000)
-    ), cache_scope():
+    # The window takes the vector count itself, not the cache
+    # partitioning above: that is a compute-density choice, and its
+    # defaultParallelism cap would pin AQE off for an arbitrarily large
+    # corpus whenever defaultParallelism == 1 (ADVICE r15).
+    with single_partition_loop(emb.sparkSession, n_vecs), cache_scope():
         q = scoped_persist(emb.repartition(n_parts))
         seed_rows = q.filter(F.col("vec_id") == 0).collect()
         if not seed_rows:

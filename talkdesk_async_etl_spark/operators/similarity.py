@@ -694,17 +694,15 @@ def pq_train_codebooks(emb: DataFrame) -> list[list[list[float]]]:
         ).alias("s", "subv"),
     )
     # The count materializes the caller's emb persist under the normal
-    # AQE profile and sizes the round-exchange window: each Lloyd round
-    # is one scan + one S·K·DS-cell aggregate, nothing for AQE to
-    # re-plan when the corpus fits one partition (no-op at scale —
-    # session.single_partition_loop).
-    n_parts = max(1, emb.count() // 100_000 + 1)
+    # AQE profile and bounds the round-exchange window: each Lloyd round
+    # is one scan + one S·K·DS-cell aggregate.
+    n_vecs = emb.count()
     seed = emb.orderBy("vec_id").limit(_PQ_K).select("v").collect()
     cb = [
         [list(r["v"])[s * _PQ_DS : (s + 1) * _PQ_DS] for r in seed]
         for s in range(_PQ_S)
     ]
-    with single_partition_loop(emb.sparkSession, n_parts):
+    with single_partition_loop(emb.sparkSession, n_vecs):
         for _ in range(_PQ_ROUNDS):
             cb_lit = _nested_lit(cb)
             best = F.expr(
@@ -971,11 +969,10 @@ def sim_ivfpq_recall_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PQ tiers carry, now for their composition.
 
     Bounded-output invariant (collect_release), so BOTH pipelines
-    execute inside the size-derived conf window — the pipeline-wrapper
-    rule (no-op at cluster scale), sized from the embeddings metadata
+    execute inside the conf window, bounded by the embeddings metadata
     count."""
     n_vecs = t(spark, sf_dir, "embeddings").count()  # metadata count
-    with single_partition_loop(spark, max(1, n_vecs // 100_000 + 1)), cache_scope():
+    with single_partition_loop(spark, n_vecs), cache_scope():
         exact = sim_topk_cosine(spark, sf_dir).select("q_id", "neighbor_id")
         approx = (
             sim_topk_ivfpq(spark, sf_dir)

@@ -30,6 +30,7 @@ from talkdesk_async_etl_spark.operators.sampling import (
 )
 from talkdesk_async_etl_spark.plans.cache import scoped_persist
 from talkdesk_async_etl_spark.plans.registry import query
+from talkdesk_async_etl_spark.session import partitions_for
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 
@@ -1322,8 +1323,8 @@ def two_pass_ntile(
     that the caller already has for free (a parquet metadata count of
     the source table, or the FK-domain table the grouping key draws
     from). When the bound says the relation fits one partition
-    (the same ~100k-row rule as session.single_partition_loop), the
-    range exchange is pinned to ONE partition: the range-bounds
+    (``session.partitions_for(size_hint) == 1``), the range exchange
+    is pinned to ONE partition: the range-bounds
     sampling pass, the session-default fan of near-empty range
     partitions, and the |partitions|² offset join all collapse, while
     the plan SHAPE (rangepartitioning exchange → sort → offset
@@ -1333,7 +1334,7 @@ def two_pass_ntile(
     bound above the threshold, keeps the session-default behavior —
     at cluster scale the hint is the table row count and the branch
     never fires."""
-    if size_hint is not None and max(1, size_hint // 100_000 + 1) == 1:
+    if size_hint is not None and partitions_for(size_hint) == 1:
         srt = df.repartitionByRange(1, *order_cols).sortWithinPartitions(*order_cols)
     else:
         srt = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)

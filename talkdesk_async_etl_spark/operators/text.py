@@ -780,16 +780,10 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = t(spark, sf_dir, "documents").count()  # parquet metadata count
     n_parts = max(1, n_docs // 500_000)
     learned: list[tuple[int, str, str, int]] = []
-    # Size-derived round-exchange rule (session.single_partition_loop):
-    # when the encoded corpus fits one partition the per-round AQE
-    # re-planning over the single pair-count exchange is pure overhead;
-    # no-op at scale. The window signal uses the same ~100k-row
-    # fits-one-partition threshold as every other call site — NOT the
-    # 500k-docs/partition cache-sizing rule above, which is a byte
-    # heuristic 10x looser than the window's contract (ADVICE r15).
-    with single_partition_loop(
-        d.sparkSession, max(1, n_docs // 100_000 + 1)
-    ), cache_scope():
+    # The window takes the doc count itself, NOT the 500k-docs/partition
+    # cache-sizing rule above, a byte heuristic 10x looser than the
+    # window's contract (ADVICE r15).
+    with single_partition_loop(d.sparkSession, n_docs), cache_scope():
         base = scoped_persist(
             d.select(base_expr.alias("e"))
             .filter(F.col("e") != "")

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from talkdesk_async_etl_spark.plans.cache import scoped_persist
 from talkdesk_async_etl_spark.plans.registry import query
-from talkdesk_async_etl_spark.session import single_partition_loop
 from talkdesk_async_etl_spark.sources.io import read_table as t
 
 
@@ -1086,38 +1085,34 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t", F.lit(_MARKOV_MICRO).cast("decimal(38,0)").alias("pi")
     ).localCheckpoint()
     tr = trans.join(rowsum, "i")
-    # Size-derived round-exchange rule (session.single_partition_loop):
-    # everything below the matrix build is |types|²-sized; the tiny
-    # signal is the materialized pi checkpoint's own partition count.
-    with single_partition_loop(ev.sparkSession, pi.rdd.getNumPartitions()):
-        for _ in range(_MARKOV_ITERS):
-            raw = (
-                F.broadcast(pi.withColumnRenamed("t", "i"))
-                .join(tr, "i")
-                .groupBy(F.col("j").alias("t"))
-                .agg(
-                    F.sum(
-                        F.expr(
-                            "CAST((pi * c - (pi * c) % rs) / rs AS DECIMAL(38,0))"
-                        )
-                    ).alias("raw")
-                )
-            )
-            tot = raw.agg(F.sum("raw").alias("tot"))
-            pi = (
-                types.join(F.broadcast(raw), "t", "left")
-                .crossJoin(F.broadcast(tot))
-                .select(
-                    "t",
+    for _ in range(_MARKOV_ITERS):
+        raw = (
+            F.broadcast(pi.withColumnRenamed("t", "i"))
+            .join(tr, "i")
+            .groupBy(F.col("j").alias("t"))
+            .agg(
+                F.sum(
                     F.expr(
-                        f"CAST(CASE WHEN raw IS NULL OR tot = 0 THEN 0"
-                        f" ELSE (raw * {_MARKOV_MICRO}"
-                        f"       - (raw * {_MARKOV_MICRO}) % tot) / tot"
-                        f" END AS DECIMAL(38,0))"
-                    ).alias("pi"),
-                )
-                .localCheckpoint()
+                        "CAST((pi * c - (pi * c) % rs) / rs AS DECIMAL(38,0))"
+                    )
+                ).alias("raw")
             )
+        )
+        tot = raw.agg(F.sum("raw").alias("tot"))
+        pi = (
+            types.join(F.broadcast(raw), "t", "left")
+            .crossJoin(F.broadcast(tot))
+            .select(
+                "t",
+                F.expr(
+                    f"CAST(CASE WHEN raw IS NULL OR tot = 0 THEN 0"
+                    f" ELSE (raw * {_MARKOV_MICRO}"
+                    f"       - (raw * {_MARKOV_MICRO}) % tot) / tot"
+                    f" END AS DECIMAL(38,0))"
+                ).alias("pi"),
+            )
+            .localCheckpoint()
+        )
     return (
         pi.join(F.broadcast(rowsum.withColumnRenamed("i", "t")), "t", "left")
         .select(

@@ -52,13 +52,18 @@ class PipelineConfig:
         """The reports a run fetches, in ``reports`` order: enabled, in
         ``env``, and with an endpoint of their ``endpoint_type`` in
         ``env``. Two endpoints of one type in ``env`` raise
-        ``ValueError``; the join would run each of its reports twice."""
+        ``ValueError``, as do two planned rows of one ``report_name``:
+        either way one report would run twice into one output path."""
         types = Counter(e.endpoint_type for e in self.endpoints if e.env == self.env)
         if dup := sorted(t for t, n in types.items() if n > 1):
             raise ValueError(f"more than one {self.env!r} endpoint of type {', '.join(dup)}")
-        return tuple(
+        plan = tuple(
             r for r in self.reports if r.enabled and r.env == self.env and r.endpoint_type in types
         )
+        names = Counter(r.report_name for r in plan)
+        if dup := sorted(n for n, k in names.items() if k > 1):
+            raise ValueError(f"more than one {self.env!r} report named {', '.join(dup)}")
+        return plan
 
 
 def from_json_doc(doc: dict, env: str = "dev") -> PipelineConfig:

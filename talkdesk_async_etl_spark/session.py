@@ -83,6 +83,17 @@ def build_session(
     return spark
 
 
+# The engine's one "fits one partition" rule, in rows.
+SINGLE_PARTITION_ROWS = 100_000
+
+
+def partitions_for(rows: int) -> int:
+    """Partition count for a relation of at most ``rows`` rows: one per
+    started block of :data:`SINGLE_PARTITION_ROWS`, so the result is 1
+    exactly when ``rows < SINGLE_PARTITION_ROWS``."""
+    return rows // SINGLE_PARTITION_ROWS + 1
+
+
 # Ownership state for single_partition_loop's session-global conf pin:
 # one thread may hold (and nest) the window; any other thread trying to
 # open one while it is held is a contract violation and fails loudly.
@@ -92,27 +103,32 @@ _window_depth = 0
 
 
 @contextmanager
-def single_partition_loop(spark: SparkSession, n_parts: int):
-    """Execution-conf window for fixpoint loops whose per-round
-    relations fit ONE partition (``n_parts == 1`` — the same
-    graph-size-derived partition count the iterative operators already
-    use to size their persisted relations, never a core-count rule).
+def single_partition_loop(spark: SparkSession, rows: int):
+    """Execution-conf window for work whose relations fit ONE
+    partition.
+
+    ``rows`` is an UPPER BOUND on the rows of the relations the window
+    covers, and the caller must already have it without a new scan: a
+    parquet metadata count of the source table, or the count that
+    materialized a persist the work then reads. Never run a count only
+    to call this. The window opens exactly when
+    ``partitions_for(rows) == 1`` (``rows < SINGLE_PARTITION_ROWS``);
+    at or above the bound it is a NO-OP and AQE keeps its runtime
+    re-planning, so cluster-scale behavior is unchanged.
 
     Inside the window AQE is disabled and ``shuffle.partitions`` is
-    pinned to 1: a single-partition loop round has nothing for AQE to
+    pinned to 1: a single-partition round has nothing for AQE to
     coalesce or skew-split, so its per-query-stage re-planning is pure
     scheduling overhead paid once per materialized round — measured
     0.28 s → 0.16 s per label-propagation round on the sf0.1 dup-pair
     graph (256 pairs), ~30-35% off whole fixpoint loops (guide §1.2
     step 2: per-task/scheduling work, after the algorithm shape).
-    On a real graph (n_parts > 1, i.e. ≥100k edges) the window is a
-    NO-OP and AQE keeps its runtime re-planning — the toggle derives
-    from data size, so cluster-scale behavior is unchanged.
 
-    Both confs restore on exit. Safe because every iterative operator
-    materializes each round inside the loop (localCheckpoint + count /
-    collect); no lazy plan built in the window is executed after it —
-    and the harnesses are single-threaded (plans/cache.py contract).
+    Both confs restore on exit, also when the body raises. Safe because
+    every windowed operator materializes its work inside the window
+    (localCheckpoint + count / collect); no lazy plan built in the
+    window is executed after it — and the harnesses are single-threaded
+    (plans/cache.py contract).
 
     The conf pin is SESSION-GLOBAL, so the single-threaded assumption
     is load-bearing: a query submitted from another thread while a
@@ -126,7 +142,7 @@ def single_partition_loop(spark: SparkSession, n_parts: int):
     concurrent queries on separate sessions via ``newSession()``,
     which shares the SparkContext but isolates SQL conf.
     """
-    if n_parts > 1:
+    if partitions_for(rows) > 1:
         yield
         return
     me = threading.get_ident()

@@ -5579,6 +5579,41 @@ def test_hits_star_graph_exact_micro(spark):
     assert got2 == {n: (py_h[n], py_a[n]) for n in (0, 1, 2, 3)}
 
 
+def test_graph_kernels_build_their_edge_list_once(spark, monkeypatch):
+    """pagerank_from_edges, hits_from_edges and graph_bfs_distance size
+    their partitions from the count that materializes the persisted
+    edge list they then read, never from a count run only for sizing:
+    a filter UDF that counts its calls in an accumulator sees each
+    input row exactly once over the whole kernel."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import BooleanType
+
+    from talkdesk_async_etl_spark.operators import graph
+    from talkdesk_async_etl_spark.plans.cache import cache_scope
+
+    def counted(df):
+        acc = spark.sparkContext.accumulator(0)
+
+        def seen(_v):
+            acc.add(1)
+            return True
+
+        return df.filter(F.udf(seen, BooleanType())(df.columns[0])), acc
+
+    rows = [(0, 1, 1), (1, 2, 1), (2, 0, 1), (2, 3, 2), (3, 1, 1)]
+    for core, w in ((graph.pagerank_from_edges, "double"), (graph.hits_from_edges, "long")):
+        typed = [(a, b, float(x) if w == "double" else x) for a, b, x in rows]
+        edges, acc = counted(spark.createDataFrame(typed, f"src long, dst long, w {w}"))
+        with cache_scope():
+            assert len(core(edges, iters=2).collect()) == 4
+        assert acc.value == len(rows), core.__name__
+
+    und, acc = counted(spark.createDataFrame([(a, b) for a, b, _ in rows[:4]], "a int, b int"))
+    monkeypatch.setattr(graph, "_trade_und", lambda spark, sf_dir: und)
+    assert graph.graph_bfs_distance(spark, SF_SMALL).count() == 4
+    assert acc.value == 4
+
+
 def test_silhouette_constructed(spark, tmp_path):
     """Two tight orthogonal clusters around centroids 0/1 -> mean
     silhouette near 1 in both cells; values replicated in pure Python

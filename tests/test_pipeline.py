@@ -386,16 +386,28 @@ def test_report_plan_matches_the_join(spark, tmp_path, reports, endpoints):
 
 
 def test_report_plan_rejects_duplicate_endpoint_type(spark, tmp_path, fixture_dir):
-    """Two ``dev`` endpoints of one type would run each of its reports
-    twice into one output path; the run raises before it logs a job."""
-    cfg = PipelineConfig(
-        "dev", str(tmp_path / "out"), reports=(ReportConfig("agent_activity"),),
-        endpoints=(_endpoint(), _endpoint(base_url="https://y"), _endpoint(env="prod")),
-    )
-    mon = MonitoringStore(spark, str(tmp_path / "mon"))
-    with pytest.raises(ValueError, match="standard"):
-        run_pipeline(spark, cfg, LocalFileReportSource(fixture_dir), mon, "2024-01-01", "2024-01-02")
-    assert not os.path.exists(mon.job_path)
+    """Two ``dev`` endpoints of one type, or two ``dev`` report rows of
+    one name (catalog rows that differ only in ``timeout_sec``), would
+    run a report twice into one output path; the run raises, naming the
+    type or the report, before it logs a job."""
+    cases = [
+        (
+            (ReportConfig("agent_activity"),),
+            (_endpoint(), _endpoint(base_url="https://y"), _endpoint(env="prod")),
+            "standard",
+        ),
+        (
+            (ReportConfig("agent_activity"), ReportConfig("agent_activity", timeout_sec=60)),
+            (_endpoint(),),
+            "agent_activity",
+        ),
+    ]
+    for i, (reports, endpoints, match) in enumerate(cases):
+        cfg = PipelineConfig("dev", str(tmp_path / f"out{i}"), reports=reports, endpoints=endpoints)
+        mon = MonitoringStore(spark, str(tmp_path / f"mon{i}"))
+        with pytest.raises(ValueError, match=match):
+            run_pipeline(spark, cfg, LocalFileReportSource(fixture_dir), mon, "2024-01-01", "2024-01-02")
+        assert not os.path.exists(mon.job_path)
 
 
 def test_driver_async_run_starts_no_spark_jobs(spark, tmp_path, fixture_dir):
@@ -1038,30 +1050,38 @@ def test_cluster_conf_shape():
 
 
 def test_single_partition_loop_window_semantics(spark):
-    """The round-15 optimization primitive: the size-derived conf
-    window must (1) pin AQE off + shuffle.partitions=1 inside exactly
-    when the caller's size signal says one partition, (2) be a NO-OP
-    when the relation spans real partitions (cluster-scale safety),
-    and (3) restore both confs on exit even when the body raises."""
+    """The one fits-one-partition rule: the conf window takes a row
+    bound and must (1) pin AQE off + shuffle.partitions=1 inside exactly
+    when the bound is below ``SINGLE_PARTITION_ROWS`` (99 999 rows opens
+    it, 100 000 does not), (2) be a NO-OP at or above it (cluster-scale
+    safety), and (3) restore both confs on exit even when the body
+    raises."""
     import pytest
 
-    from talkdesk_async_etl_spark.session import single_partition_loop
+    from talkdesk_async_etl_spark.session import (
+        SINGLE_PARTITION_ROWS,
+        partitions_for,
+        single_partition_loop,
+    )
 
+    small, big = 99_999, 100_000
+    assert SINGLE_PARTITION_ROWS == big
+    assert (partitions_for(0), partitions_for(small), partitions_for(big)) == (1, 1, 2)
     aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     parts0 = spark.conf.get("spark.sql.shuffle.partitions")
 
-    with single_partition_loop(spark, 1):
+    with single_partition_loop(spark, small):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
 
-    with single_partition_loop(spark, 2):  # real graph -> no-op
+    with single_partition_loop(spark, big):  # real graph -> no-op
         assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
         assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
 
     with pytest.raises(RuntimeError, match="boom"):
-        with single_partition_loop(spark, 1):
+        with single_partition_loop(spark, small):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
@@ -1069,7 +1089,7 @@ def test_single_partition_loop_window_semantics(spark):
     # Nesting (the composed pipelines open a window around operators
     # that open their own): inner exit must not clobber the outer
     # window's pin.
-    with single_partition_loop(spark, 1):
+    with single_partition_loop(spark, small):
         with single_partition_loop(spark, 1):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
@@ -1080,32 +1100,32 @@ def test_single_partition_loop_window_semantics(spark):
     # Cross-thread guard (ADVICE r15): the conf pin is session-global,
     # so a SECOND thread opening a window while one is held must fail
     # loudly instead of silently sharing/clobbering the pin. A no-op
-    # window (n_parts > 1) from another thread stays legal — it never
-    # touches conf.
+    # window (a bound at or above the rule) from another thread stays
+    # legal — it never touches conf.
     import threading
 
     errs: list[BaseException] = []
 
-    def other_thread_window(n_parts):
+    def other_thread_window(rows):
         try:
-            with single_partition_loop(spark, n_parts):
+            with single_partition_loop(spark, rows):
                 pass
         except BaseException as exc:  # noqa: BLE001 — recorded for assert
             errs.append(exc)
 
-    with single_partition_loop(spark, 1):
-        th = threading.Thread(target=other_thread_window, args=(1,))
+    with single_partition_loop(spark, small):
+        th = threading.Thread(target=other_thread_window, args=(small,))
         th.start()
         th.join()
         assert len(errs) == 1 and "another thread" in str(errs[0])
-        th2 = threading.Thread(target=other_thread_window, args=(2,))
+        th2 = threading.Thread(target=other_thread_window, args=(big,))
         th2.start()
         th2.join()
         assert len(errs) == 1  # no-op window from another thread is fine
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts0
     # ... and after release, another thread may take the window.
-    th3 = threading.Thread(target=other_thread_window, args=(1,))
+    th3 = threading.Thread(target=other_thread_window, args=(small,))
     th3.start()
     th3.join()
     assert len(errs) == 1
