@@ -200,6 +200,7 @@ def pagerank_from_edges(
         .repartition(n_parts, "src")
     )
     nodes, n_nodes, j = _graph_nodes(edges, n_parts)
+    edges_raw.unpersist()  # the rounds read only the partitioned edges
     with single_partition_loop(edges_raw.sparkSession, n_edges):
         ranks = nodes.select(
             "node", F.lit(1.0 / n_nodes).alias("pr")
@@ -488,6 +489,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = scoped_persist(edges_wide.repartition(partitions_for(n_edges), "src"))
         # Bounded driver fetch: the single source id.
         src0 = edges.agg(F.min("src").alias("m")).collect()[0]["m"]
+        und.unpersist()  # that scan materialized edges, all the rounds read
         dist = scoped_persist(
             edges.sparkSession.createDataFrame(
                 [(int(src0), 0)], "node int, dist int"
@@ -1196,6 +1198,7 @@ def hits_from_edges(edges_raw: DataFrame, iters: int = _HITS_ITERS) -> DataFrame
     n_parts = partitions_for(n_edges)
     edges = scoped_persist(edges_raw.repartition(n_parts, "src"))
     nodes, _, j = _graph_nodes(edges, n_parts)
+    edges_raw.unpersist()  # the rounds read only the partitioned edges
 
     def norm(raw: DataFrame, key: str, out: str, checkpoint: bool) -> DataFrame:
         tot = raw.agg(F.sum("raw").alias("tot"))
